@@ -110,118 +110,6 @@ def ring_geodesic_perimeter_km(xs: Column, ys: Column) -> Column:
     )
 
 
-# ---------------------------------------------------- point-in-polygon
-#
-# Catalyst-expression twins of the numpy PIP kernels (geo/kernels.py:
-# points_strictly_inside / on_boundary_masks / claims_raster_cell,
-# ring-list variants) — the broadcast assign path's hot loop with NO
-# Python in it: a zone travels as one array<struct<xs, ys, hole>>
-# column and the whole even-odd + boundary + west-wall evaluation is a
-# nested fold (aggregate over rings, aggregate over edges) inside
-# whole-stage codegen.  Semantics notes mirrored from the kernels:
-#   * even-odd parity across ALL rings (holes/multiparts fall out);
-#   * boundary epsilon 1e-9 with per-edge scale (cross / max(|dx|,|dy|,1));
-#   * west wall = vertical edge whose polygon interior is +x of it
-#     (ccw XOR hole flips the side), excluded for raster-cell claims;
-#   * claim rule: (inside AND NOT on_boundary) OR (on_boundary AND NOT
-#     on_west_wall).
-
-_EPS = 1e-9
-
-
-def _edges(xs: Column, ys: Column) -> Column:
-    """array<struct<ax, ay, bx, by>> of ring edges (wrapping)."""
-    return F.arrays_zip(
-        xs.alias("ax"), ys.alias("ay"), _rot(xs).alias("bx"), _rot(ys).alias("by")
-    )
-
-
-def _ring_state(px: Column, py: Column, xs: Column, ys: Column, ccw: Column):
-    """struct<i, a, w>: even-odd parity, on-any-boundary, on-west-wall
-    for ONE ring — a single fold over the edge array.
-
-    ``ccw`` is the ring's effective interior orientation —
-    ``(signed_area > 0) XOR hole`` — passed in precomputed: for literal
-    zone layers it is a CONSTANT, and deriving it here would splice a
-    whole signed-area fold into every edge step (measured: pushes the
-    expression tree from O(edges) to O(edges²) per point per ring)."""
-
-    def step(acc, e):
-        ax, ay, bx, by = e["ax"], e["ay"], e["bx"], e["by"]
-        # ray cast (horizontal edges: cond is false; xint's /0 yields
-        # inf/nan which the AND masks out — ANSI off)
-        cond = (ay > py) != (by > py)
-        xint = ax + (py - ay) * (bx - ax) / (by - ay)
-        crossed = cond & (px < xint)
-        # boundary: |cross| <= eps * scale, inside the eps-padded bbox
-        inbox = (
-            (px >= F.least(ax, bx) - F.lit(_EPS))
-            & (px <= F.greatest(ax, bx) + F.lit(_EPS))
-            & (py >= F.least(ay, by) - F.lit(_EPS))
-            & (py <= F.greatest(ay, by) + F.lit(_EPS))
-        )
-        cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        scale = F.greatest(F.abs(bx - ax), F.abs(by - ay), F.lit(1.0))
-        on_seg = inbox & (F.abs(cross) <= F.lit(_EPS) * scale)
-        going_down = by < ay
-        interior_right = F.when(ccw, going_down).otherwise(~going_down)
-        is_west = (ax == bx) & (ay != by) & interior_right
-        return F.struct(
-            (acc["i"] != crossed).alias("i"),
-            (acc["a"] | on_seg).alias("a"),
-            (acc["w"] | (on_seg & is_west)).alias("w"),
-        )
-
-    init = F.struct(
-        F.lit(False).alias("i"), F.lit(False).alias("a"), F.lit(False).alias("w")
-    )
-    return F.aggregate(_edges(xs, ys), init, step)
-
-
-def point_zone_state(px: Column, py: Column, rings: Column) -> Column:
-    """struct<i, a, w> across a ring-list zone column
-    (``array<struct<xs: array<double>, ys: array<double>, ccw:
-    boolean>>`` — ``ccw`` = (signed_area > 0) XOR hole, precomputed):
-    parity XORs over rings, boundary masks OR."""
-
-    def step(acc, r):
-        s = _ring_state(px, py, r["xs"], r["ys"], r["ccw"])
-        return F.struct(
-            (acc["i"] != s["i"]).alias("i"),
-            (acc["a"] | s["a"]).alias("a"),
-            (acc["w"] | s["w"]).alias("w"),
-        )
-
-    init = F.struct(
-        F.lit(False).alias("i"), F.lit(False).alias("a"), F.lit(False).alias("w")
-    )
-    return F.aggregate(rings, init, step)
-
-
-def _once(state: Column, fn) -> Column:
-    """Evaluate ``state`` ONCE and feed it to ``fn`` — the one-element
-    array+transform let-binding idiom.  Without it, every field
-    reference re-splices the entire nested PIP fold into the plan
-    (Catalyst has no subexpression sharing across lambda boundaries;
-    measured 4x tree blowup on the claim rule)."""
-    return F.transform(F.array(state), fn)[0]
-
-
-def point_claims_zone(px: Column, py: Column, rings: Column) -> Column:
-    """Raster-assignment claim (kernels.claims_raster_cell_rings twin):
-    interior off-boundary, or boundary that is not a west wall."""
-    return _once(
-        point_zone_state(px, py, rings),
-        lambda s: (s["i"] & ~s["a"]) | (s["a"] & ~s["w"]),
-    )
-
-
-def point_within_zone(px: Column, py: Column, rings: Column) -> Column:
-    """Strict interior (kernels.points_within_rings twin): odd parity
-    and not on any ring boundary."""
-    return _once(point_zone_state(px, py, rings), lambda s: s["i"] & ~s["a"])
-
-
 # ------------------------------------------------------------ geodesic
 
 R_EARTH_KM = 6371.0088  # IUGG mean Earth radius

@@ -154,94 +154,3 @@ def explode_points_within_df(
 
     return df.mapInPandas(run, schema=schema)
 
-
-# ----------------------------------------------- pure-expression path
-#
-# Catalyst-only twin of the broadcast path: the zone layer becomes ONE
-# literal array<struct<zone_id, rings>> expression and the whole
-# even-odd/boundary/west-wall evaluation runs inside whole-stage codegen
-# (functions/geometry.py PIP folds) — no Python worker, no Arrow hop.
-# Right for small zone layers (the literal expression tree grows with
-# vertex count; big/hot layers belong to the partitioned spatial join).
-# Parity with the pandas-UDF kernels is pytest-asserted on the golden
-# fixtures and random dyadic points (tests/test_geometry_cols.py).
-
-
-def _zones_literal_sql(zones: ZoneSet) -> str:
-    """SQL literal for array<struct<zone_id: bigint, rings:
-    array<struct<xs: array<double>, ys: array<double>, ccw: boolean>>>>.
-
-    ``ccw`` — the ring's effective interior orientation, (signed_area >
-    0) XOR hole — is folded in HERE, driver-side: it is constant per
-    ring, and computing it inside the expression would nest a
-    signed-area fold into every edge step of the PIP evaluation."""
-
-    def arr(v) -> str:
-        return "array(" + ", ".join(f"{float(x)!r}D" for x in v) + ")"
-
-    zs = []
-    for zid, rings in zip(zones.zone_ids, zones.rings_list()):
-        rs = ", ".join(
-            "named_struct('xs', {x}, 'ys', {y}, 'ccw', {c})".format(
-                x=arr(xs),
-                y=arr(ys),
-                c="true" if (K.signed_area(xs, ys) > 0) != bool(hole) else "false",
-            )
-            for xs, ys, hole in rings
-        )
-        zs.append(f"named_struct('zone_id', {int(zid)}L, 'rings', array({rs}))")
-    return "array(" + ", ".join(zs) + ")"
-
-
-def assign_cells_df_expr(
-    df: DataFrame,
-    zones: ZoneSet,
-    x: str = "x",
-    y: str = "y",
-    out: str = "zone_id",
-    keep_unassigned: bool = True,
-) -> DataFrame:
-    """Raster-rule assignment with zero Python in the hot path: claim
-    mask per zone via the expression PIP, last-id-wins via array_max
-    over the claiming zones (same semantics as :func:`assign_cells_df`,
-    parity-tested)."""
-    from pyspark.sql import functions as F
-
-    from ..functions.geometry import point_claims_zone
-
-    if out in df.columns:
-        df = df.drop(out)
-    Z = F.expr(_zones_literal_sql(zones))
-    px, py = df[x], df[y]
-    claiming = F.filter(Z, lambda z: point_claims_zone(px, py, z["rings"]))
-    zid = F.array_max(F.transform(claiming, lambda z: z["zone_id"]))
-    result = df.withColumn(out, zid)
-    if not keep_unassigned:
-        result = result.filter(result[out].isNotNull())
-    return result
-
-
-def assign_points_within_df_expr(
-    df: DataFrame,
-    zones: ZoneSet,
-    x: str = "x",
-    y: str = "y",
-    out: str = "zone_id",
-    hits: str = "n_zones",
-) -> DataFrame:
-    """Strict-interior assignment, expression path: lowest matching id +
-    hit count (same contract as :func:`assign_points_within_df`)."""
-    from pyspark.sql import functions as F
-
-    from ..functions.geometry import point_within_zone
-
-    for c in (out, hits):
-        if c in df.columns:
-            df = df.drop(c)
-    Z = F.expr(_zones_literal_sql(zones))
-    px, py = df[x], df[y]
-    within = F.filter(Z, lambda z: point_within_zone(px, py, z["rings"]))
-    zid = F.array_min(F.transform(within, lambda z: z["zone_id"]))
-    return df.withColumn(out, zid).withColumn(
-        hits, F.size(within).cast("long")
-    )

@@ -6,7 +6,7 @@ doc_pairs_geodesic).  At contract scale the candidate join pays a
 spread exchange, a 9/27-way neighborhood explode and a shuffle join —
 work one task enumerates in milliseconds when the point table is small.
 
-How: below the gate, ONE Arrow-batched ``mapInPandas`` task enumerates
+How: below the gate, ONE ``plans.local.one_task`` task enumerates
 the exactly-once candidate pairs with the IDENTICAL integer cell
 arithmetic (``floor(lon / w)`` is the same IEEE double divide + floor
 in numpy and in Catalyst), carrying both points' coordinates.  The
@@ -16,26 +16,27 @@ the distributed join's by construction: same candidate set, same
 predicate, same arithmetic engine.  Parity is pinned in
 tests/test_pairs_local.py and by the DuckDB oracles of every caller.
 
-Gate: the optimizer's size estimate for the projected input (fixed
-per-type widths over the pruned scan — no driver action, so the fast
-path costs ZERO extra jobs).  The default ``SPARK_GRAFT_SMALL_POINTS``
-= 250k rows ≈ 16 MB of (id, lon, lat[, us]) — the same bounded-work
-class as the graph_local gates; ``0`` disables the fast path everywhere
-(the parity tests and any caller that wants the distributed join's
-hot-cell AQE skew handling).  At corpus scale the estimate is orders of
-magnitude above the gate and the distributed join runs untouched.
+Gate: ``plans.local.fits(sel, "points")`` — for file-backed inputs the
+optimizer's size estimate for the projected input (fixed per-type
+widths over the pruned scan — no driver action, so the fast path costs
+ZERO extra jobs) against 250k rows × 64 B; in-memory inputs are
+counted.  ``plans/local.py`` owns the limit, the evidence rules and the
+one switch (``SPARK_GRAFT_SMALL_GRAPH=0`` disables the fast path
+everywhere: the parity tests and any caller that wants the distributed
+join's hot-cell AQE skew handling).  At corpus scale the estimate is
+orders of magnitude above the gate and the distributed join runs
+untouched.
 
 Density note: candidate volume is data-dependent (Σ in-cell C(n,2) +
 neighbor cross products) for BOTH paths; below the gate the single task
 does the same enumeration the shuffle join would, on one core instead
-of ≤32, with memory bounded by chunked emission.  The quadratic
-worst case (every point in one cell) is the operator's own asymptotic
-shape, not this path's.
+of ≤32; output leaves in chunks, but each neighbor offset's index
+arrays are O(its candidate count).  The quadratic worst case (every
+point in one cell) is the operator's own asymptotic shape, not this
+path's.
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
@@ -43,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, FloatType, LongType
 
-DEFAULT_SMALL_POINTS = 250_000
+from ..plans.local import fits, one_task
 
 # lexicographically-positive half neighborhoods: each unordered cell
 # pair within Chebyshev distance 1 is enumerated exactly once
@@ -55,13 +56,6 @@ _HALF_3D = tuple(
     for dz in (-1, 0, 1)
     if (dx, dy, dz) > (0, 0, 0)
 )
-
-
-def small_points_threshold(default: int = DEFAULT_SMALL_POINTS) -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_SMALL_POINTS", str(default)))
-    except ValueError:  # pragma: no cover
-        return default
 
 
 def _numeric_coord(dt) -> bool:
@@ -121,66 +115,33 @@ def local_candidate_pairs(
     ``None`` when the gate says the distributed join should run.  The
     CALLER applies the identical Catalyst rescore (haversine / |Δt|)
     so the filtered edge set is bit-identical."""
-    thr = small_points_threshold()
-    if not thr:
-        return None
-    # zero-cost gate: no driver action — see module docstring
-    try:
-        est = int(sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - defensive (connect-only plans)
-        return None
-    if est > thr * 64:
-        # RDD-backed local relations have NO size estimate: the leaf
-        # reports Long.MaxValue and projections scale it by width
-        # ratios, so "unknown" surfaces as an astronomical number.
-        # Anything below ~2^61 (2.3 exabytes) is a real file-backed
-        # estimate -> genuinely too big; above it, one cheap count
-        # settles the question (file-backed scans always carry a real
-        # size, so the contract paths never pay this action).
-        if est < (1 << 61) or sel.count() > thr:
-            return None
-
     temporal = eps_t_us is not None
+    # a NULL id or time can never pass a<b or the |Δt| rescore: dropping
+    # those rows JVM-side keeps both columns exact int64 in the task
+    sel = sel.where(F.col("_id").isNotNull())
+    if temporal:
+        sel = sel.where(F.col("_us").isNotNull())
+    if not fits(sel, "points"):
+        return None
+
     wlon_f, wlat_f = float(wlon), float(wlat)
     eps_us_f = float(int(eps_t_us)) if temporal else None
 
-    def run(batches):
-        cols = ["_id", "_lon", "_lat"] + (["_us"] if temporal else [])
-        parts = {c: [] for c in cols}
-        for pdf in batches:
-            for c in cols:
-                parts[c].append(pdf[c].to_numpy())
-        if parts["_id"]:
-            ids_raw = np.concatenate(parts["_id"])
-            lon = np.concatenate(parts["_lon"]).astype(np.float64, copy=False)
-            lat = np.concatenate(parts["_lat"]).astype(np.float64, copy=False)
-            us = np.concatenate(parts["_us"]) if temporal else None
-        else:
-            ids_raw = np.empty(0, dtype=np.int64)
-            lon = lat = np.empty(0, dtype=np.float64)
-            us = np.empty(0, dtype=np.int64) if temporal else None
-
-        # rows a NULL id or NULL/NaN coordinate keeps out of the
-        # distributed join (NULL ids never pass a<b; NULL keys never
-        # match; NaN pairs always fail the rescore) are dropped up
-        # front — same final edge set either way.  A null-bearing long
-        # column arrives as float64 (NaN for nulls).
+    def run(pdf):
+        # NaN/inf coordinates (NULLs arrive as NaN) never match a cell
+        # key or pass the rescore in the distributed join — dropped up
+        # front, same final edge set either way
+        lon = pdf["_lon"].to_numpy(np.float64)
+        lat = pdf["_lat"].to_numpy(np.float64)
         keep = np.isfinite(lon) & np.isfinite(lat)
-        if ids_raw.dtype != np.int64:
-            keep &= np.isfinite(ids_raw.astype(np.float64, copy=False))
-        if temporal:
-            us = np.asarray(us)
-            usf_all = us.astype(np.float64, copy=False)
-            keep &= np.isfinite(usf_all)
-        ids = ids_raw[keep].astype(np.int64)
+        ids = pdf["_id"].to_numpy(np.int64)[keep]
         lon, lat = lon[keep], lat[keep]
         if temporal:
             # the cell bucket uses the double promotion (exactly what
             # Catalyst's floor(us / eps) does); the emitted micros stay
-            # exact int64 when the batch arrived as int64 (nulls force
-            # a float64 arrival, exact below 2^53 — micros epochs are)
-            usf = usf_all[keep]
-            usl = us[keep] if us.dtype == np.int64 else usf.astype(np.int64)
+            # exact int64
+            usl = pdf["_us"].to_numpy(np.int64)[keep]
+            usf = usl.astype(np.float64)
 
         out_cols = (
             ["_aid", "_alon", "_alat", "_aus", "_bid", "_blon", "_blat", "_bus"]
@@ -298,4 +259,4 @@ def local_candidate_pairs(
         if temporal
         else "_aid long, _alon double, _alat double, _bid long, _blon double, _blat double"
     )
-    return sel.coalesce(1).mapInPandas(run, schema)
+    return one_task(sel, run, schema)

@@ -445,10 +445,10 @@ def flow_accumulation(
     # 3.9 s at sf0.1) — one task computes the identical integer
     # subtree sizes (graph_local.subtree_sizes_local); above it the
     # O(log n) Euler-tour/Wyllie ranking below engages unchanged.
-    from ..ops.graph_local import small_graph_threshold, subtree_sizes_local
+    from ..ops.graph_local import subtree_sizes_local
+    from ..plans.local import fits
 
-    thr = small_graph_threshold()
-    if thr and base.count() <= thr:
+    if fits(base, "edges"):
         sizes = subtree_sizes_local(
             edges.select("u", F.col("p").alias("v"))
         )
@@ -970,19 +970,27 @@ def cost_distance(
     if nodata is not None:
         v = v.where(F.col(value) != nodata)
     # ONE agg job: the eager positivity check (pinned by
-    # test_cost_distance_multi_source_nodata_and_invariance) and the small-raster gate count
-    # share the same action (r8 job-fold)
-    n_cells, min_c = v.agg(F.count(F.lit(1)), F.min(value)).first()
+    # test_cost_distance_multi_source_nodata_and_invariance), the
+    # small-raster gate count and the twin's key-range check share the
+    # same action (r8 job-fold)
+    n_cells, min_c, lo, hi = v.agg(
+        F.count(F.lit(1)),
+        F.min(value),
+        F.least(F.min("row"), F.min("col")),
+        F.greatest(F.max("row"), F.max("col")),
+    ).first()
     if min_c is not None and min_c <= 0:
         raise ValueError("cost surface must be strictly positive")
     key = (F.col("row").cast("long") * F.lit(4294967296)) + F.col("col").cast("long")
     base = v.select("row", "col", F.col(value).alias("c"), key.alias("cell"))
     shifts = ((0, 1, 500000.0), (1, 0, 500000.0),
               (1, 1, 707106.7811865476), (1, -1, 707106.7811865476))
-    from ..ops.graph_local import small_graph_threshold
+    from ..plans.local import fits, one_task
 
-    thr = small_graph_threshold()
-    if thr and n_cells * 8 <= thr:
+    # the twin matches neighbors on packed row*2^32+col keys, exact only
+    # while rows and cols stay in [0, 2^31) — other grids stay distributed
+    in_range = lo is None or (lo >= 0 and hi < 1 << 31)
+    if in_range and fits(v, "edges", rows=n_cells * 8):
         # One-task edge builder (r8): the 4 shift self-joins + union
         # cost several AQE stages and a many-task checkpoint for a grid
         # one task enumerates instantly.  Identical arithmetic: int64
@@ -992,19 +1000,10 @@ def cost_distance(
         import numpy as np
         import pandas as pd
 
-        def build(batches):
-            rs, cs, vs = [], [], []
-            for pdf in batches:
-                if len(pdf):
-                    rs.append(pdf["row"].to_numpy(np.int64))
-                    cs.append(pdf["col"].to_numpy(np.int64))
-                    vs.append(pdf["c"].to_numpy(np.float64))
-            if not rs:
-                yield pd.DataFrame({"src": [], "dst": [], "w": []})
-                return
-            row = np.concatenate(rs)
-            col = np.concatenate(cs)
-            c = np.concatenate(vs)
+        def build(pdf):
+            row = pdf["row"].to_numpy(np.int64)
+            col = pdf["col"].to_numpy(np.int64)
+            c = pdf["c"].to_numpy(np.float64)
             cell = row * np.int64(4294967296) + col
             order = np.argsort(cell, kind="stable")
             cell, row, col, c = cell[order], row[order], col[order], c[order]
@@ -1030,10 +1029,10 @@ def cost_distance(
                         }
                     )
                 )
-            yield pd.concat(outs, ignore_index=True)
+            return pd.concat(outs, ignore_index=True)
 
-        edges = base.select("row", "col", "c").coalesce(1).mapInPandas(
-            build, "src long, dst long, w long"
+        edges = one_task(
+            base.select("row", "col", "c"), build, "src long, dst long, w long"
         )
     else:
         right = base.select(

@@ -105,10 +105,10 @@ def cluster_from_edges(
     # identical integer/min-rule labels (graph_local.dbscan_labels_local
     # — same core rule, same component minima, same border min); above
     # the threshold the distributed pipeline below runs unchanged.
-    from .graph_local import dbscan_labels_local, small_graph_threshold
+    from ..plans.local import fits
+    from .graph_local import dbscan_labels_local
 
-    thr = small_graph_threshold()
-    if thr and edges.count() <= thr:
+    if fits(edges, "edges"):
         lab = dbscan_labels_local(
             edges.select(F.col(a).alias("u"), F.col(b).alias("v")),
             int(min_pts),

@@ -376,10 +376,9 @@ def _jaccard_pairs_capped(
     # the same single float64 division per pair).  Parity pinned in
     # tests/test_round4.py::test_jaccard_capped_local_parity; above the
     # gate the distributed shape below runs unchanged.
-    from .graph_local import small_graph_threshold
+    from ..plans.local import fits
 
-    thr = small_graph_threshold(20_000)
-    if thr and docs.count() <= thr:
+    if fits(docs, "jaccard_docs"):
         return _jaccard_capped_local(docs, text, k, threshold, max_df)
     hset = F.array_distinct(
         F.transform(word_shingles(F.col(text), k), _md5_int)
@@ -438,26 +437,23 @@ def _jaccard_capped_local(
 ) -> DataFrame:
     """One-task exact twin of the capped-candidate jaccard (see the
     fast-path comment in ``_jaccard_pairs_capped``)."""
+    from ..plans.local import one_task
 
-    def run(batches):
+    def run(pdf):
         import numpy as _np
         import pandas as _pd
 
         from .graph_local import _group_pairs
 
-        ids_l, sets_l = [], []
-        for pdf in batches:
-            for doc_id, hs in zip(pdf["doc_id"], pdf["_set"]):
-                ids_l.append(int(doc_id))
-                sets_l.append(_np.asarray(hs, dtype=_np.int64))
         cols = ["doc_a", "doc_b", "n_common", "n_a", "n_b", "jaccard"]
-        if not ids_l:
-            yield _pd.DataFrame({c: [] for c in cols})
-            return
-        ids = _np.asarray(ids_l, dtype=_np.int64)
+        empty = _pd.DataFrame({c: [] for c in cols})
+        if pdf.empty:
+            return empty
+        ids = pdf["doc_id"].to_numpy(_np.int64)
         order = _np.argsort(ids, kind="stable")
         ids = ids[order]
-        sets_l = [sets_l[i] for i in order]
+        sets = pdf["_set"].to_numpy()
+        sets_l = [_np.asarray(sets[i], dtype=_np.int64) for i in order]
         n_docs = ids.size
         doc_of = _np.repeat(
             _np.arange(n_docs), [s.size for s in sets_l]
@@ -491,23 +487,23 @@ def _jaccard_capped_local(
             ja = float(nc) / float(na + nb - nc)
             if ja >= threshold:
                 rows.append((int(ids[a]), int(ids[b]), nc, na, nb, ja))
-        yield _pd.DataFrame(rows, columns=cols) if rows else _pd.DataFrame(
-            {c: [] for c in cols}
-        )
+        return _pd.DataFrame(rows, columns=cols) if rows else empty
 
     hset = F.array_distinct(
         F.transform(word_shingles(F.col(text), k), _md5_int)
     )
     # the md5 shingle pass runs PARALLEL (spread scan); only the tiny
-    # (doc_id, int-set) table crosses the repartition(1) exchange into
+    # (doc_id, int-set) table crosses the one-partition exchange into
     # the single combining task
     pre = spread(
         docs.select("doc_id", F.col(text).alias("text")), "doc_id"
     ).select("doc_id", hset.alias("_set"))
-    return pre.repartition(1).mapInPandas(
+    return one_task(
+        pre,
         run,
         "doc_a long, doc_b long, n_common long, n_a long, n_b long, "
         "jaccard double",
+        shuffle=True,
     )
 
 
@@ -1137,9 +1133,11 @@ def _single_task_components(docs: DataFrame, edges: DataFrame, key: str) -> Data
     Callers gate on an edge count ≤ ~2M (≈32 MB in one task) — the same
     bounded-work class as the k-means k×dim driver collect.  Duplicate
     or doubled (both-direction) edges are harmless to union-find."""
+    from ..plans.local import one_task
+
     utype = dict(edges.dtypes)["u"]
 
-    def _uf(batches):
+    def _uf(pdf):
         """Vectorized min-hooking (Shiloach–Vishkin shape): each round
         points every edge's larger current label at the smaller one
         (``np.minimum.at``), then pointer-doubles to full compression —
@@ -1150,16 +1148,7 @@ def _single_task_components(docs: DataFrame, edges: DataFrame, key: str) -> Data
         import numpy as _np
         import pandas as _pd
 
-        us, vs = [], []
-        for pdf in batches:
-            if len(pdf):
-                us.append(pdf["u"].to_numpy())
-                vs.append(pdf["v"].to_numpy())
-        if not us:
-            yield _pd.DataFrame({"u": [], "v": []})
-            return
-        u = _np.concatenate(us)
-        v = _np.concatenate(vs)
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
         ids = _np.unique(_np.concatenate([u, v]))
         iu = _np.searchsorted(ids, u)
         iv = _np.searchsorted(ids, v)
@@ -1177,9 +1166,9 @@ def _single_task_components(docs: DataFrame, edges: DataFrame, key: str) -> Data
                 p = pp
             if _np.array_equal(p, before):
                 break
-        yield _pd.DataFrame({"u": ids, "v": ids[p]})
+        return _pd.DataFrame({"u": ids, "v": ids[p]})
 
-    roots = edges.coalesce(1).mapInPandas(_uf, f"u {utype}, v {utype}")
+    roots = one_task(edges, _uf, f"u {utype}, v {utype}")
     ids = docs.select(F.col(key).alias("id"))
     lab = ids.join(
         roots.where(F.col("u") != F.col("v"))

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.local import fits
 from .dedup import _materialize_truncated
 from .graph_local import (
     bfs_local,
@@ -38,7 +39,6 @@ from .graph_local import (
     kcore_local,
     lpa_local,
     pagerank_local,
-    small_graph_threshold,
     sssp_local,
 )
 
@@ -64,8 +64,7 @@ def triangle_counts(
     # semi-join is one numpy task below the threshold; the extra
     # wedge-count gate bounds the in-task pair generation (a 2M-edge
     # hub graph has quadratic wedges — that shape stays distributed).
-    thr = small_graph_threshold()
-    if thr and e.count() <= thr and wedge_count(e) <= 50_000_000:
+    if fits(e, "edges") and wedge_count(e) <= 50_000_000:
         tl = triangles_local(e)
         return tl.select(
             "id",
@@ -179,8 +178,7 @@ def pagerank_quantized(
     # threshold every synchronous round is pure scheduler latency — run
     # the identical integer recurrence in ONE task (graph_local) and
     # join back (isolated nodes keep PR_SCALE exactly, as in the loop).
-    thr = small_graph_threshold()
-    if thr and dir_e.count() <= thr:
+    if fits(dir_e, "edges"):
         pr = pagerank_local(dir_e, iters, damping_pct)
         state = nodes.join(pr, "id", "left").select(
             "id",
@@ -278,8 +276,7 @@ def lpa_communities(
     )
     # Small-graph fast path (r8): identical synchronous argmax rounds in
     # one task; isolated nodes keep their own id, as in the loop.
-    thr = small_graph_threshold()
-    if thr and dir_e.count() <= thr:
+    if fits(dir_e, "edges"):
         lab = lpa_local(dir_e, rounds)
         return (
             ids.select(F.col(key).alias("id"))
@@ -340,8 +337,7 @@ def link_prediction(
     # Small-graph fast path (r8): same wedge-bounded one-task twin; the
     # jaccard division below is the identical Spark expression on the
     # identical integers, so doubles match bit-for-bit.
-    thr = small_graph_threshold()
-    if thr and e.count() <= thr and wedge_count(e) <= 50_000_000:
+    if fits(e, "edges") and wedge_count(e) <= 50_000_000:
         out = link_pred_local(e, min_common)
         return out.select(
             "x",
@@ -465,8 +461,7 @@ def bfs_hops(
     src = sources.select(F.col(key).alias("id")).distinct()
     # Small-graph fast path (r8): the frontier rounds are min-plus with
     # unit weights — one task computes the exact capped BFS levels.
-    thr = small_graph_threshold()
-    if thr and dir_e.count() <= thr:
+    if fits(dir_e, "edges"):
         res = bfs_local(dir_e, src, max_hops)
         return nodes.join(res, "id", "left").select(
             F.col("id").alias(key), "hops"
@@ -536,8 +531,7 @@ def kcore_nodes(
     )
     # Small-graph fast path (r8): the k-core is unique, so the one-task
     # peel returns the identical survivor set + in-core degrees.
-    thr = small_graph_threshold()
-    if thr and e.count() <= thr:
+    if fits(e, "edges"):
         return kcore_local(e, k).select("id", "core_deg")
     for _ in range(max_rounds):
         dir_e = e.unionByName(
@@ -598,8 +592,7 @@ def coreness(
     )
     # Small-graph fast path (r8): the identical non-increasing h-index
     # map iterated to its (unique) fixpoint in one task.
-    thr = small_graph_threshold()
-    if thr and dir_e.count() <= thr:
+    if fits(dir_e, "edges"):
         return coreness_local(dir_e).select("id", "coreness")
     state = _materialize_truncated(
         dir_e.groupBy(F.col("u").alias("id")).agg(
@@ -679,8 +672,7 @@ def sssp_bounded(
     ).first()
     if min_w is not None and min_w < 0:
         raise ValueError("edge weights must be non-negative")
-    thr = small_graph_threshold()
-    if thr and n_dir <= thr:
+    if fits(dir_e, "edges", rows=n_dir):
         res = sssp_local(dir_e, src, max_rounds)
         return nodes.join(res, "id", "left").select(
             F.col("id").alias(key), "dist"

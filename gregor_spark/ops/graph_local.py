@@ -9,52 +9,33 @@ through in milliseconds.  Profiled at sf0.1/local[32]: cost_distance =
 bfs_hops 37 jobs / 3.6 s.  This is the r7 union-find lesson
 (``dedup._single_task_components``) applied to the rest of the family.
 
-How: below ``small_graph_edges`` directed/undirected edges (default
-2,000,000 ≈ 48 MB of int64 triples in one task — the same bounded-work
+How: below the ``"edges"`` limit of ``plans.local.LIMITS`` (2,000,000
+edges ≈ 48 MB of int64 triples in one task — the same bounded-work
 class as the k-means k×dim driver collect), the edge table runs through
-ONE Arrow-batched ``mapInPandas`` task computing the identical integer
-recurrence in numpy; above it, the distributed loop engages unchanged.
-Every recurrence here is integer-exact and order-independent (min-plus,
-int sums, argmax with a total tie rule), so both paths are bit-identical
-by construction — parity is pinned in tests/test_graph_local.py and the
-DuckDB oracles replay the same rounds.
+``plans.local.one_task`` — ONE Arrow-batched task computing the
+identical integer recurrence in numpy; above it, the distributed loop
+engages unchanged.  Every recurrence here is integer-exact and
+order-independent (min-plus, int sums, argmax with a total tie rule),
+so both paths are bit-identical by construction — parity is pinned in
+tests/test_graph_local.py and the DuckDB oracles replay the same rounds.
 
-The gate counts a MATERIALIZED edge table (``_materialize_truncated``)
-that the chosen path then consumes, so the count never re-runs the
-upstream candidate join (the ADVICE r7 lesson on dedup_clusters'
-un-materialized count).  ``SPARK_GRAFT_SMALL_GRAPH`` overrides the
-threshold (0 disables every fast path — used by the parity tests and
-the honest-scaling benches, where the loop is the subject).
+Callers gate with ``plans.local.fits`` on a MATERIALIZED edge table
+(``_materialize_truncated``) that the chosen path then consumes, so the
+gate's count never re-runs the upstream candidate join (the ADVICE r7
+lesson on dedup_clusters' un-materialized count).  ``plans/local.py``
+owns the limits, the evidence rules and the one switch
+(``SPARK_GRAFT_SMALL_GRAPH=0`` disables every twin — used by the parity
+tests and the honest-scaling benches, where the loop is the subject).
 """
 
 from __future__ import annotations
-
-import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SMALL_EDGES = 2_000_000
-
-
-def small_graph_threshold(default: int = DEFAULT_SMALL_EDGES) -> int:
-    try:
-        return int(os.environ.get("SPARK_GRAFT_SMALL_GRAPH", str(default)))
-    except ValueError:  # pragma: no cover
-        return default
-
-
-def _collect_batches(batches, cols):
-    parts = {c: [] for c in cols}
-    for pdf in batches:
-        for c in cols:
-            parts[c].append(pdf[c].to_numpy())
-    return {
-        c: (np.concatenate(v) if v else np.empty(0, dtype=np.int64))
-        for c, v in parts.items()
-    }
+from ..plans.local import one_task
 
 
 def _index_ids(*arrays):
@@ -86,13 +67,13 @@ def sssp_local(
         )
     )
 
-    def run(batches):
-        d = _collect_batches(batches, ["u", "v", "w", "_t"])
-        is_edge = d["_t"] == 0
-        eu, ev, ew = d["u"][is_edge], d["v"][is_edge], d["w"][is_edge]
+    def run(pdf):
+        u, v, w = (pdf[c].to_numpy() for c in ("u", "v", "w"))
+        is_edge = pdf["_t"].to_numpy() == 0
+        eu, ev, ew = u[is_edge], v[is_edge], w[is_edge]
         if ew.size and ew.min() < 0:
             raise ValueError("edge weights must be non-negative")
-        src = d["u"][~is_edge]
+        src = u[~is_edge]
         ids = _index_ids(eu, ev, src)
         n = ids.size
         iu = np.searchsorted(ids, eu)
@@ -114,9 +95,9 @@ def sssp_local(
         out = pd.DataFrame({"id": ids, "dist": dist})
         out["dist"] = out["dist"].astype("object")
         out.loc[dist >= BIG, "dist"] = None
-        yield out
+        return out
 
-    return tagged.coalesce(1).mapInPandas(run, "id long, dist long")
+    return one_task(tagged, run, "id long, dist long")
 
 
 def bfs_local(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
@@ -137,12 +118,12 @@ def pagerank_local(
     reach this function (they keep PR_SCALE; the caller coalesces)."""
     from .graph import PR_SCALE
 
-    def run(batches):
-        d = _collect_batches(batches, ["u", "v"])
-        ids = _index_ids(d["u"], d["v"])
+    def run(pdf):
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        ids = _index_ids(u, v)
         n = ids.size
-        iu = np.searchsorted(ids, d["u"])
-        iv = np.searchsorted(ids, d["v"])
+        iu = np.searchsorted(ids, u)
+        iv = np.searchsorted(ids, v)
         deg = np.zeros(n, dtype=np.int64)
         np.add.at(deg, iu, 1)
         rank = np.full(n, PR_SCALE, dtype=np.int64)
@@ -154,9 +135,9 @@ def pagerank_local(
             inflow = np.zeros(n, dtype=np.int64)
             np.add.at(inflow, iv, per_edge[iu])
             rank = keep + inflow
-        yield pd.DataFrame({"id": ids, "rank_q": rank})
+        return pd.DataFrame({"id": ids, "rank_q": rank})
 
-    return edges.coalesce(1).mapInPandas(run, "id long, rank_q long")
+    return one_task(edges, run, "id long, rank_q long")
 
 
 def lpa_local(edges: DataFrame, rounds: int) -> DataFrame:
@@ -164,11 +145,11 @@ def lpa_local(edges: DataFrame, rounds: int) -> DataFrame:
     the exact synchronous LPA recurrence of ``lpa_communities``
     (argmax neighbor-label count, ties to the SMALLEST label)."""
 
-    def run(batches):
-        d = _collect_batches(batches, ["u", "v"])
-        ids = _index_ids(d["u"], d["v"])
-        iu = np.searchsorted(ids, d["u"])
-        iv = np.searchsorted(ids, d["v"])
+    def run(pdf):
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        ids = _index_ids(u, v)
+        iu = np.searchsorted(ids, u)
+        iv = np.searchsorted(ids, v)
         label = ids.copy()
         for _ in range(int(rounds)):
             nb = label[iu]  # label arriving at iv
@@ -194,9 +175,9 @@ def lpa_local(edges: DataFrame, rounds: int) -> DataFrame:
             if np.array_equal(new, label):
                 break
             label = new
-        yield pd.DataFrame({"id": ids, "label": label})
+        return pd.DataFrame({"id": ids, "label": label})
 
-    return edges.coalesce(1).mapInPandas(run, "id long, label long")
+    return one_task(edges, run, "id long, label long")
 
 
 def kcore_local(edges: DataFrame, k: int) -> DataFrame:
@@ -204,12 +185,12 @@ def kcore_local(edges: DataFrame, k: int) -> DataFrame:
     exact fixpoint of the bulk peel (unique, so any peel order agrees).
     ``edges`` is the canonical UNDIRECTED table (u != v, distinct)."""
 
-    def run(batches):
-        d = _collect_batches(batches, ["u", "v"])
-        ids = _index_ids(d["u"], d["v"])
+    def run(pdf):
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        ids = _index_ids(u, v)
         n = ids.size
-        iu = np.searchsorted(ids, d["u"])
-        iv = np.searchsorted(ids, d["v"])
+        iu = np.searchsorted(ids, u)
+        iv = np.searchsorted(ids, v)
         alive_e = np.ones(iu.size, dtype=bool)
         alive_n = np.ones(n, dtype=bool)
         while True:
@@ -218,20 +199,18 @@ def kcore_local(edges: DataFrame, k: int) -> DataFrame:
             np.add.at(deg, iv[alive_e], 1)
             drop = alive_n & (deg < k)
             if not drop.any():
-                yield pd.DataFrame(
+                return pd.DataFrame(
                     {"id": ids[alive_n], "core_deg": deg[alive_n]}
                 )
-                return
             alive_n &= ~drop
             alive_e &= alive_n[iu] & alive_n[iv]
             if not alive_n.any():
-                yield pd.DataFrame(
+                return pd.DataFrame(
                     {"id": np.empty(0, dtype=np.int64),
                      "core_deg": np.empty(0, dtype=np.int64)}
                 )
-                return
 
-    return edges.coalesce(1).mapInPandas(run, "id long, core_deg long")
+    return one_task(edges, run, "id long, core_deg long")
 
 
 def _group_pairs(sizes: np.ndarray):
@@ -255,12 +234,12 @@ def triangles_local(edges: DataFrame) -> DataFrame:
     ``triangle_counts``'s degree-ordered wedge method (same
     orientation, same closure test, pure integer counting)."""
 
-    def run(batches):
-        d = _collect_batches(batches, ["u", "v"])
-        ids = _index_ids(d["u"], d["v"])
+    def run(pdf):
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        ids = _index_ids(u, v)
         n = max(ids.size, 1)
-        iu = np.searchsorted(ids, d["u"])
-        iv = np.searchsorted(ids, d["v"])
+        iu = np.searchsorted(ids, u)
+        iv = np.searchsorted(ids, v)
         deg = np.zeros(n, dtype=np.int64)
         np.add.at(deg, iu, 1)
         np.add.at(deg, iv, 1)
@@ -286,11 +265,11 @@ def triangles_local(edges: DataFrame) -> DataFrame:
         n_tri = np.zeros(n, dtype=np.int64)
         for arr in (wsrc[closed], wx[closed], wy[closed]):
             np.add.at(n_tri, arr, 1)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {"id": ids, "degree": deg[: ids.size], "n_tri": n_tri[: ids.size]}
         )
 
-    return edges.coalesce(1).mapInPandas(run, "id long, degree long, n_tri long")
+    return one_task(edges, run, "id long, degree long, n_tri long")
 
 
 def link_pred_local(edges: DataFrame, min_common: int) -> DataFrame:
@@ -299,12 +278,12 @@ def link_pred_local(edges: DataFrame, min_common: int) -> DataFrame:
     join (same candidate set, same counts; the jaccard division is left
     to the caller's identical Spark expression)."""
 
-    def run(batches):
-        d = _collect_batches(batches, ["u", "v"])
-        ids = _index_ids(d["u"], d["v"])
+    def run(pdf):
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        ids = _index_ids(u, v)
         n = max(ids.size, 1)
-        iu = np.searchsorted(ids, d["u"])
-        iv = np.searchsorted(ids, d["v"])
+        iu = np.searchsorted(ids, u)
+        iv = np.searchsorted(ids, v)
         w = np.concatenate([iu, iv])
         x = np.concatenate([iv, iu])
         deg = np.zeros(n, dtype=np.int64)
@@ -333,7 +312,7 @@ def link_pred_local(edges: DataFrame, min_common: int) -> DataFrame:
         uniq, counts = uniq[~is_edge], counts[~is_edge]
         cx = (uniq // n).astype(np.int64)
         cy = (uniq % n).astype(np.int64)
-        yield pd.DataFrame(
+        return pd.DataFrame(
             {
                 "x": ids[cx],
                 "y": ids[cy],
@@ -343,8 +322,8 @@ def link_pred_local(edges: DataFrame, min_common: int) -> DataFrame:
             }
         )
 
-    return edges.coalesce(1).mapInPandas(
-        run, "x long, y long, common long, deg_x long, deg_y long"
+    return one_task(
+        edges, run, "x long, y long, common long, deg_x long, deg_y long"
     )
 
 
@@ -357,12 +336,12 @@ def dbscan_labels_local(edges: DataFrame, min_pts: int) -> DataFrame:
     (no edges at all) never reach this function — the caller handles
     them with the identical rule."""
 
-    def run(batches):
-        d = _collect_batches(batches, ["u", "v"])
-        ids = _index_ids(d["u"], d["v"])
+    def run(pdf):
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        ids = _index_ids(u, v)
         n = ids.size
-        iu = np.searchsorted(ids, d["u"])
-        iv = np.searchsorted(ids, d["v"])
+        iu = np.searchsorted(ids, u)
+        iv = np.searchsorted(ids, v)
         deg = np.zeros(n, dtype=np.int64)
         np.add.at(deg, iu, 1)
         np.add.at(deg, iv, 1)
@@ -401,11 +380,9 @@ def dbscan_labels_local(edges: DataFrame, min_pts: int) -> DataFrame:
             np.where(out_c >= BIG, 0, out_c), dtype="Int64"
         )
         res.loc[out_c >= BIG, "cluster_id"] = pd.NA
-        yield res
+        return res
 
-    return edges.coalesce(1).mapInPandas(
-        run, "id long, is_core boolean, cluster_id long"
-    )
+    return one_task(edges, run, "id long, is_core boolean, cluster_id long")
 
 
 def wedge_count(edges: DataFrame) -> int:
@@ -436,12 +413,12 @@ def subtree_sizes_local(edges: DataFrame) -> DataFrame:
     deepest up — every step integer-exact, so the result matches the
     Euler-tour/Wyllie distributed ranking bit-for-bit."""
 
-    def run(batches):
-        d = _collect_batches(batches, ["u", "v"])
-        ids = _index_ids(d["u"], d["v"])
+    def run(pdf):
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        ids = _index_ids(u, v)
         n = ids.size
-        iu = np.searchsorted(ids, d["u"])
-        iv = np.searchsorted(ids, d["v"])
+        iu = np.searchsorted(ids, u)
+        iv = np.searchsorted(ids, v)
         parent = np.arange(n)
         parent[iu] = iv  # roots (sinks) point to themselves
         # depth via pointer doubling
@@ -464,9 +441,9 @@ def subtree_sizes_local(edges: DataFrame) -> DataFrame:
             for lvl in range(maxd, 0, -1):
                 sel = order[bounds[lvl]:bounds[lvl + 1]]
                 np.add.at(size, parent[sel], size[sel])
-        yield pd.DataFrame({"id": ids, "n_up": size - 1})
+        return pd.DataFrame({"id": ids, "n_up": size - 1})
 
-    return edges.coalesce(1).mapInPandas(run, "id long, n_up long")
+    return one_task(edges, run, "id long, n_up long")
 
 
 def coreness_local(edges: DataFrame) -> DataFrame:
@@ -475,12 +452,12 @@ def coreness_local(edges: DataFrame) -> DataFrame:
     the distributed op iterates the identical non-increasing map, so
     the fixpoints coincide).  ``edges`` is the DIRECTED table."""
 
-    def run(batches):
-        d = _collect_batches(batches, ["u", "v"])
-        ids = _index_ids(d["u"], d["v"])
+    def run(pdf):
+        u, v = pdf["u"].to_numpy(), pdf["v"].to_numpy()
+        ids = _index_ids(u, v)
         n = ids.size
-        iu = np.searchsorted(ids, d["u"])
-        iv = np.searchsorted(ids, d["v"])
+        iu = np.searchsorted(ids, u)
+        iv = np.searchsorted(ids, v)
         deg = np.zeros(n, dtype=np.int64)
         np.add.at(deg, iu, 1)
         c = deg.copy()
@@ -498,8 +475,7 @@ def coreness_local(edges: DataFrame) -> DataFrame:
             new = np.zeros(n, dtype=np.int64)
             np.maximum.at(new, gu, m)
             if np.array_equal(new, c):
-                yield pd.DataFrame({"id": ids, "coreness": c})
-                return
+                return pd.DataFrame({"id": ids, "coreness": c})
             c = new
 
-    return edges.coalesce(1).mapInPandas(run, "id long, coreness long")
+    return one_task(edges, run, "id long, coreness long")

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..plans.local import fits, one_task
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -789,30 +791,22 @@ def _kmeans_fit_local(
     centroids; the only driver traffic is the k×dim centroid collect —
     the same bounded class as the distributed loop's means collect."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        keys_l, vecs_l = [], []
-        for pdf in batches:
-            if len(pdf):
-                keys_l.append(pdf[key].to_numpy(np.int64))
-                vecs_l.append(np.asarray(pdf["_v"].tolist(), dtype=np.float64))
-        if not keys_l:
-            yield pd.DataFrame({"cid": [], "pos": [], "val": []})
-            return
-        keys = np.concatenate(keys_l)
-        V = np.concatenate(vecs_l, axis=0)
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        if pdf.empty:
+            return pd.DataFrame({"cid": [], "pos": [], "val": []})
+        keys = pdf[key].to_numpy(np.int64)
+        V = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
         cents = _kmeans_loop_np(_md5_init_order(keys), V, k, iters, round_to)
         rows = [
             (int(c), int(p), float(v))
             for c, vec_c in enumerate(cents)
             for p, v in enumerate(vec_c)
         ]
-        yield pd.DataFrame(rows, columns=["cid", "pos", "val"])
+        return pd.DataFrame(rows, columns=["cid", "pos", "val"])
 
-    out = (
-        base.coalesce(1)
-        .mapInPandas(run, "cid long, pos long, val double")
-        .collect()
-    )  # k×dim rows — driver-bounded by construction
+    out = one_task(
+        base, run, "cid long, pos long, val double"
+    ).collect()  # k×dim rows — driver-bounded by construction
     if not out:
         raise ValueError("kmeans_fit: empty corpus")
     by_cid: dict[int, dict[int, float]] = {}
@@ -872,11 +866,7 @@ def kmeans_fit(
     # kmeans_assign either way.  Parity pinned in
     # tests/test_kmeans_local.py; above the threshold the distributed
     # loop (one corpus pass per iteration) engages unchanged.
-    from .graph_local import small_graph_threshold
-
-    thr = small_graph_threshold(200_000)
-    n_vec = df.count() if thr else None
-    if thr and 0 < n_vec <= thr:
+    if fits(base, "vectors"):
         cents = _kmeans_fit_local(base, k, iters, key, round_to)
         return kmeans_assign(df, cents, vec=vec, key=key, method=method), cents
     h = F.conv(
@@ -1117,28 +1107,17 @@ def pq_train(
     # tests/test_kmeans_local.py; above the threshold (or with
     # SPARK_GRAFT_SMALL_GRAPH=0) the per-subspace kmeans_fit loops run
     # unchanged.
-    from .graph_local import small_graph_threshold
-
-    thr = small_graph_threshold(200_000)
-    if thr and 0 < df.count() <= thr:
+    if fits(df, "vectors"):
         base = df.select(
             F.col(key).cast("long").alias(key),
             F.col(vec).cast("array<double>").alias("_v"),
         )
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            keys_l, vecs_l = [], []
-            for pdf in batches:
-                if len(pdf):
-                    keys_l.append(pdf[key].to_numpy(np.int64))
-                    vecs_l.append(
-                        np.asarray(pdf["_v"].tolist(), dtype=np.float64)
-                    )
-            if not keys_l:
-                yield pd.DataFrame({"m": [], "cid": [], "pos": [], "val": []})
-                return
-            keys = np.concatenate(keys_l)
-            V = np.concatenate(vecs_l, axis=0)
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            if pdf.empty:
+                return pd.DataFrame({"m": [], "cid": [], "pos": [], "val": []})
+            keys = pdf[key].to_numpy(np.int64)
+            V = np.asarray(pdf["_v"].tolist(), dtype=np.float64)
             order = _md5_init_order(keys)
             rows = []
             for i in range(m):
@@ -1151,13 +1130,11 @@ def pq_train(
                     for c, vec_c in enumerate(cents)
                     for p, v in enumerate(vec_c)
                 )
-            yield pd.DataFrame(rows, columns=["m", "cid", "pos", "val"])
+            return pd.DataFrame(rows, columns=["m", "cid", "pos", "val"])
 
-        out = (
-            base.coalesce(1)
-            .mapInPandas(run, "m long, cid long, pos long, val double")
-            .collect()
-        )  # m·k·sub_dim rows — driver-bounded by construction
+        out = one_task(
+            base, run, "m long, cid long, pos long, val double"
+        ).collect()  # m·k·sub_dim rows — driver-bounded by construction
         if not out:
             raise ValueError("kmeans_fit: empty corpus")
         books_arr: list[list[list[float]]] = [

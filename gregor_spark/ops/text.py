@@ -569,13 +569,13 @@ def _bpe_train_merges_local(
     sequential driver-synchronized jobs with one for small corpora
     (parity pinned in tests/test_bpe.py::test_bpe_local_parity)."""
 
-    def run(batches):
+    from ..plans.local import one_task
+
+    def run(pdf):
         import numpy as np
         import pandas as _pd
 
-        texts: list[str] = []
-        for pdf in batches:
-            texts.extend(pdf["_enc"].tolist())
+        texts: list[str] = pdf["_enc"].tolist()
         vocab: dict[str, int] = {}
         seqs = []
         SEP = -1
@@ -638,17 +638,15 @@ def _bpe_train_merges_local(
                 idx = np.asarray(keep, dtype=np.int64)
             a[idx] = new_id
             a = np.delete(a, idx + 1)
-        yield _pd.DataFrame(
+        return _pd.DataFrame(
             merges, columns=["rank", "left", "right", "cnt"]
         ) if merges else _pd.DataFrame(
             {"rank": [], "left": [], "right": [], "cnt": []}
         )
 
-    rows = (
-        enc_df.coalesce(1)
-        .mapInPandas(run, "rank long, left string, right string, cnt long")
-        .collect()
-    )
+    rows = one_task(
+        enc_df, run, "rank long, left string, right string, cnt long"
+    ).collect()
     return [(int(r["rank"]), r["left"], r["right"], int(r["cnt"])) for r in rows]
 
 
@@ -699,11 +697,9 @@ def bpe_train(
     # per training.  At scale the per-round materialization returns
     # (recomputing r corpus-wide replace passes in round r is the wrong
     # trade there); either way the replace semantics are identical.
-    from .graph_local import small_graph_threshold
+    from ..plans.local import fits
 
-    lazy_rounds = bool(small_graph_threshold(100_000)) and (
-        docs.count() <= small_graph_threshold(100_000)
-    )
+    lazy_rounds = fits(docs, "bpe_docs")
     if lazy_rounds:
         # r8 small-corpus path: ALL rounds in one task (see
         # _bpe_train_merges_local) — one job instead of 2 per round;
@@ -991,11 +987,9 @@ def bpe_train_bytes(
             "doc_id", _bpe_encode_bytes(F.col(text)).alias("_enc")
         )
     )
-    from .graph_local import small_graph_threshold
+    from ..plans.local import fits
 
-    lazy_rounds = bool(small_graph_threshold(100_000)) and (
-        docs.count() <= small_graph_threshold(100_000)
-    )
+    lazy_rounds = fits(docs, "bpe_docs")
     if lazy_rounds:
         # see bpe_train: one-task trainer below the gate (segments kept
         # by the space separator — split_segments=True)

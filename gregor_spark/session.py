@@ -12,6 +12,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_GB = 48
+
+
+def default_driver_memory() -> str:
+    """Half of the host's physical RAM (``MemTotal``), capped at 48g: in
+    local mode the driver JVM is the whole engine, so it gets real
+    memory, but a heap sized past the host gets the JVM OOM-killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kb = int(line.split()[1])
+                    return f"{max(1, min(_MAX_DRIVER_GB << 10, kb >> 11))}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return f"{_MAX_DRIVER_GB}g"
+
 
 def get_spark(
     app: str = "gregor-spark",
@@ -37,7 +54,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # local mode = driver-only: give the single JVM real memory or 32
         # concurrent task threads invert scaling on GC pressure
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # r8: multi-path reads (the manifest-listed Iceberg-like tables)
         # below this path count are listed on the driver instead of
         # through a distributed listing job — on a local filesystem the

@@ -330,12 +330,8 @@ def test_bpe_apply_bytes_counts(spark):
     assert out["n_tokens"] == 8  # per word: 68 (C3A9) (6C6C) 6F
 
 
-def test_bpe_local_parity(spark, monkeypatch):
-    """r8: the one-task trainer must reproduce the per-round distributed
-    loop exactly — merges AND final encodings, both variants, on a
-    corpus with repeated-token runs, short docs, parens and non-ASCII."""
-    from gregor_spark.ops.text import bpe_train, bpe_train_bytes
-
+def _bpe_docs(spark):
+    """Repeated-token runs, short docs, parens and non-ASCII."""
     rows = [
         (0, "aa aa aa aa bb aa aa"),
         (1, "the cat sat on the mat the cat"),
@@ -346,7 +342,16 @@ def test_bpe_local_parity(spark, monkeypatch):
         (6, "(parens) stay (safe) here (parens)"),
         (7, "the the the the the the"),
     ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_bpe_local_parity(spark, monkeypatch):
+    """r8: the one-task trainer must reproduce the per-round distributed
+    loop exactly — merges AND final encodings, both variants, on a
+    corpus with repeated-token runs, short docs, parens and non-ASCII."""
+    from gregor_spark.ops.text import bpe_train, bpe_train_bytes
+
+    docs = _bpe_docs(spark)
 
     def run():
         m1, e1 = bpe_train(docs, n_merges=5)

@@ -67,91 +67,6 @@ def test_zone_metrics_holed_area(spark):
     assert abs(rows[1].perimeter - (4.0 + 2.0)) < 1e-12
 
 
-# ------------------------------------------------ expression PIP parity
-
-
-def _rand_points(n=400, step=64):
-    """Deterministic dyadic test points over the fixture extent —
-    dyadic grid keeps float arithmetic exact so the numpy and Catalyst
-    evaluations cannot diverge inside the eps band."""
-    import numpy as np
-
-    rng = np.random.default_rng(7)
-    px = rng.integers(-32, 128, n) / step * 1.0 + (-0.25)
-    py = rng.integers(-32, 160, n) / step * 1.0 + 9.75
-    return px, py
-
-
-def _points_df(spark, px, py):
-    vals = ", ".join(f"({i}L, {x!r}D, {y!r}D)" for i, (x, y) in enumerate(zip(px, py)))
-    return spark.sql(f"SELECT * FROM VALUES {vals} AS t(pid, x, y)")
-
-
-def test_expr_assign_matches_kernel_paths(spark):
-    import numpy as np
-
-    from gregor_spark.model import fixtures as FX
-    from gregor_spark.model.zones import ZoneSet
-    from gregor_spark.operators.assign import (
-        assign_cells_df,
-        assign_cells_df_expr,
-        assign_points_within_df,
-        assign_points_within_df_expr,
-    )
-
-    px, py = _rand_points()
-    for fixture in (FX.SEG_3X3, FX.SEG_HOLED, FX.SEG_CONCAVE, FX.SEG_OVERLAP):
-        zones = ZoneSet.from_fixture(fixture)
-        pts = _points_df(spark, px, py)
-        a = {
-            r.pid: r.zone_id
-            for r in assign_cells_df(pts, zones).select("pid", "zone_id").collect()
-        }
-        b = {
-            r.pid: r.zone_id
-            for r in assign_cells_df_expr(pts, zones)
-            .select("pid", "zone_id")
-            .collect()
-        }
-        assert a == b, (fixture[0].zone_id, {k: (a[k], b[k]) for k in a if a[k] != b[k]})
-        aw = {
-            (r.pid): (r.zone_id, r.n_zones)
-            for r in assign_points_within_df(pts, zones)
-            .select("pid", "zone_id", "n_zones")
-            .collect()
-        }
-        bw = {
-            (r.pid): (r.zone_id, r.n_zones)
-            for r in assign_points_within_df_expr(pts, zones)
-            .select("pid", "zone_id", "n_zones")
-            .collect()
-        }
-        assert aw == bw
-
-
-def test_expr_assign_golden_3x3_matrix(spark):
-    """The reference's golden belongs matrix through the expression path:
-    raster pixel centers against SEG_3X3 (shared-edge-to-left rule,
-    corner rule included)."""
-    from gregor_spark.model import fixtures as FX
-    from gregor_spark.model.raster import RasterMeta, raster_df
-    from gregor_spark.model.zones import ZoneSet
-    from gregor_spark.operators.assign import assign_cells_df, assign_cells_df_expr
-
-    meta = RasterMeta(**FX.RASTER_META)
-    cells = raster_df(spark, meta, FX.RASTER_VALUES)
-    zones = ZoneSet.from_fixture(FX.SEG_3X3)
-    want = {
-        (r.row, r.col): r.zone_id
-        for r in assign_cells_df(cells, zones).collect()
-    }
-    got = {
-        (r.row, r.col): r.zone_id
-        for r in assign_cells_df_expr(cells, zones).collect()
-    }
-    assert got == want
-
-
 # --------------------------------------------------- geodesic distance
 
 

@@ -15,8 +15,7 @@ from pyspark.sql import functions as F
 from gregor_spark.ops import graph as G
 
 
-@pytest.fixture(scope="module")
-def graph(spark):
+def _graph(spark):
     # deterministic pseudo-random multigraph-ish pair table: ~600 nodes,
     # ~1500 canonical edges, several components, hubs and tendrils
     n, m = 600, 1500
@@ -41,6 +40,11 @@ def graph(spark):
     )
     src = spark.range(5).select((F.col("id") * 7).alias("doc_id"))
     return ids.cache(), e.cache(), w.cache(), src.cache()
+
+
+@pytest.fixture(scope="module")
+def graph(spark):
+    return _graph(spark)
 
 
 def _rows(df):

@@ -15,9 +15,9 @@ from gregor_spark.ops.dbscan import st_dbscan, st_edges
 
 def _toggle(monkeypatch, on: bool):
     if on:
-        monkeypatch.delenv("SPARK_GRAFT_SMALL_POINTS", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_SMALL_GRAPH", raising=False)
     else:
-        monkeypatch.setenv("SPARK_GRAFT_SMALL_POINTS", "0")
+        monkeypatch.setenv("SPARK_GRAFT_SMALL_GRAPH", "0")
 
 
 def _canon(df):
@@ -139,3 +139,30 @@ def test_keys_callers_stay_distributed(spark, monkeypatch):
     assert "Join" in plan
     got = _canon(out.select("grp", "a_point_id", "b_point_id"))
     assert got == [(5, 1, 2)]
+
+
+def test_ids_above_2_53_with_a_null_id(spark, monkeypatch):
+    """A NULL id must not push the batch's ids through float64: ids
+    2^53+1 and 2^53+3 are not representable there and would come back
+    as 2^53 and 2^53+4."""
+    big = 1 << 53
+    pts = spark.createDataFrame(
+        [(big + 1, 0.10, 10.0, 1_700_000_000),
+         (big + 3, 0.1001, 10.0001, 1_700_000_010),
+         (None, 0.1002, 10.0002, 1_700_000_020),
+         (5, 0.1003, 10.0003, None)],
+        "point_id long, lon double, lat double, tsec long",
+    )
+    got = _both(
+        spark, monkeypatch,
+        lambda: within_distance_join_geodesic(pts, 8.0, id_col="point_id"),
+    )
+    assert {(a, b) for a, b, _ in got} == {
+        (5, big + 1), (5, big + 3), (big + 1, big + 3)
+    }
+    ts = pts.withColumn("ts", F.col("tsec").cast("timestamp")).drop("tsec")
+    got_t = _both(
+        spark, monkeypatch,
+        lambda: st_edges(ts, 3.0, 86400.0, id_col="point_id"),
+    )
+    assert {(a, b) for a, b, *_ in got_t} == {(big + 1, big + 3)}

@@ -3,6 +3,7 @@ duplicate-subtree pins."""
 
 from pyspark.sql import functions as F
 
+from gregor_spark.plans.local import LIMITS
 from gregor_spark.plans.stats import _UNKNOWN, pin_small, plan_size_bytes
 
 
@@ -14,7 +15,7 @@ def test_rdd_backed_estimate_is_unknown(spark):
     assert pin_small(df) is df
 
 
-def test_file_backed_small_plan_pins(spark, tmp_path):
+def test_file_backed_small_plan_pins(spark, tmp_path, monkeypatch):
     p = str(tmp_path / "t.parquet")
     spark.range(100).select(
         F.col("id"), (F.col("id") * 2).alias("v")
@@ -26,4 +27,5 @@ def test_file_backed_small_plan_pins(spark, tmp_path):
     assert pinned is not df
     assert pinned.count() == 100
     # above the cap: identity
-    assert pin_small(df, cap_bytes=1) is df
+    monkeypatch.setitem(LIMITS, "pin", 0)
+    assert pin_small(df) is df

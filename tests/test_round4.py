@@ -542,13 +542,9 @@ def test_geojson_all_holes_zone_raises():
         ZoneSet.zone_rings = orig
 
 
-def test_jaccard_capped_local_parity(spark, monkeypatch):
-    """r8: the one-task capped-jaccard twin must match the distributed
-    capped pipeline row-for-row (same md5 ints, same cap, same exact
-    rescore) on a corpus with boilerplate, twins and short docs."""
+def _capped_docs(spark):
+    """300 docs with boilerplate, twins and short docs (cached)."""
     from pyspark.sql import functions as F
-
-    from gregor_spark.ops.dedup import jaccard_pairs
 
     body = F.concat_ws(
         " ",
@@ -568,12 +564,21 @@ def test_jaccard_capped_local_parity(spark, monkeypatch):
         ),
     )
     hot = F.pmod(F.hash("id"), F.lit(10)) < 4
-    docs = spark.range(300).select(
+    return spark.range(300).select(
         F.col("id").alias("doc_id"),
         F.when(
             hot, F.concat(F.lit("common boilerplate header text "), body)
         ).otherwise(body).alias("text"),
     ).cache()
+
+
+def test_jaccard_capped_local_parity(spark, monkeypatch):
+    """r8: the one-task capped-jaccard twin must match the distributed
+    capped pipeline row-for-row (same md5 ints, same cap, same exact
+    rescore) on a corpus with boilerplate, twins and short docs."""
+    from gregor_spark.ops.dedup import jaccard_pairs
+
+    docs = _capped_docs(spark)
 
     def rows():
         return sorted(

@@ -136,3 +136,34 @@ def test_pq_rejects_bad_dims(spark):
     books = pq_train(df, m=2, k=2, iters=1)
     with _pytest.raises(ValueError):
         pq_adc_topk(df, books, [0.0] * 5, n=3)  # query dim mismatch
+
+
+def test_semdedup_pinned_branch_matches_two_pass(spark, tmp_path, monkeypatch):
+    """A parquet-backed corpus carries a real size estimate, so
+    ``pin_small`` fires and semdedup takes its single-assignment branch;
+    with the pin limit at 0 it takes the two-pass branch.  Both must
+    give identical rows."""
+    from gregor_spark.plans import stats
+    from gregor_spark.plans.local import LIMITS
+
+    df, _ = _corpus(spark)
+    p = str(tmp_path / "emb.parquet")
+    df.write.parquet(p)
+    emb = spark.read.parquet(p)
+
+    pinned = []
+    real = stats.pin_small
+
+    def spy(d):
+        out = real(d)
+        pinned.append(out is not d)
+        return out
+
+    monkeypatch.setattr(stats, "pin_small", spy)
+    one = sorted(map(tuple, semdedup(emb, threshold=0.95, n_blocks=2).collect()))
+    assert pinned == [True]
+    monkeypatch.setitem(LIMITS, "pin", 0)
+    two = sorted(map(tuple, semdedup(emb, threshold=0.95, n_blocks=2).collect()))
+    assert pinned == [True, False]
+    assert one == two
+    assert len(one) == 60 and any(r[-2] == 0 for r in one)

@@ -1043,3 +1043,42 @@ def test_tri_alg_wrappers(spark):
     for k, v in ry.items():
         if v is not None:
             assert v >= w[k]
+
+
+def _cd_both(monkeypatch, fn):
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_GRAPH", raising=False)
+    fast = sorted(map(tuple, fn().collect()))
+    monkeypatch.setenv("SPARK_GRAFT_SMALL_GRAPH", "0")
+    slow = sorted(map(tuple, fn().collect()))
+    monkeypatch.delenv("SPARK_GRAFT_SMALL_GRAPH", raising=False)
+    assert fast == slow
+    return fast
+
+
+def test_cost_distance_negative_cols_match_distributed(spark, monkeypatch):
+    from gregor_spark.operators.terrain import cost_distance
+
+    vals = np.array([[1.0 + (r * 3 + c) % 4 for c in range(6)] for r in range(4)])
+    cells = spark.createDataFrame(
+        [(r, c - 3, float(vals[r, c])) for r in range(4) for c in range(6)],
+        "row int, col int, value double",
+    )
+    src = spark.createDataFrame([(0, -3)], "row int, col int")
+    got = _cd_both(monkeypatch, lambda: cost_distance(cells, src, max_rounds=12))
+    want = _cd_brute(vals, [(0, 0)])
+    assert {(r, c + 3): d for r, c, d in got} == want
+
+
+def test_cost_distance_cols_at_2_32_do_not_alias(spark, monkeypatch):
+    """Packed row*2^32+col keys make (0, 2^32-1) and (1, 0) look
+    adjacent; only the (row, col) join may decide adjacency."""
+    from gregor_spark.operators.terrain import cost_distance
+
+    edge = (1 << 32) - 1
+    cells = spark.createDataFrame(
+        [(0, edge - 1, 1.0), (0, edge, 1.0), (1, 0, 1.0), (1, 1, 1.0)],
+        "row long, col long, value double",
+    )
+    src = spark.createDataFrame([(0, edge)], "row long, col long")
+    got = _cd_both(monkeypatch, lambda: cost_distance(cells, src, max_rounds=4))
+    assert got == [(0, edge - 1, 1_000_000), (0, edge, 0), (1, 0, None), (1, 1, None)]
