@@ -129,15 +129,6 @@ def on_boundary_masks(
     return on_any, on_west
 
 
-def claims_raster_cell(
-    px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray
-) -> np.ndarray:
-    """Raster-assignment claim mask for one polygon (see module docstring)."""
-    on_any, on_west = on_boundary_masks(px, py, xs, ys)
-    inside = points_strictly_inside(px, py, xs, ys)
-    return (inside & ~on_any) | (on_any & ~on_west)
-
-
 # ------------------------------------------------------- ring-list geometry
 #
 # A zone geometry is a list of rings ``(xs, ys, is_hole)`` — one or more
@@ -168,7 +159,7 @@ def on_boundary_masks_rings(
 ) -> tuple[np.ndarray, np.ndarray]:
     """(on_any_boundary, on_west_wall) across all rings.  West-wall
     exclusion dominates when a point sits on several rings' edges (same
-    corner rule as the single-ring kernel)."""
+    corner rule as ``on_boundary_masks``)."""
     px = np.asarray(px, dtype=np.float64)
     on_any = np.zeros(px.shape, dtype=bool)
     on_west = np.zeros(px.shape, dtype=bool)
@@ -193,64 +184,15 @@ def points_within_rings(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
     return points_inside_rings(px, py, rings) & ~on_any
 
 
-def assign_cells(
-    px: np.ndarray,
-    py: np.ndarray,
-    zone_ids: np.ndarray,
-    zone_xs: list[np.ndarray],
-    zone_ys: list[np.ndarray],
-) -> np.ndarray:
-    """Assign each point to a zone id (-1 = unassigned), last-id-wins.
-
-    Polygons are applied in ascending-id order so later (higher) ids
-    overwrite, matching the reference loop (disaggregate.py:136-145).
-    Deterministic regardless of input order.
-    """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    out = np.full(px.shape, -1, dtype=np.int64)
-    order = np.argsort(np.asarray(zone_ids, dtype=np.int64), kind="stable")
-    for k in order:
-        mask = claims_raster_cell(px, py, zone_xs[k], zone_ys[k])
-        out[mask] = zone_ids[k]
-    return out
-
-
-def assign_points_within(
-    px: np.ndarray,
-    py: np.ndarray,
-    zone_ids: np.ndarray,
-    zone_xs: list[np.ndarray],
-    zone_ys: list[np.ndarray],
-) -> tuple[np.ndarray, np.ndarray]:
-    """Strict-interior (``within``) assignment.
-
-    Returns (zone_id_of_first_hit_by_ascending_id, n_hits).  The caller
-    enforces the reference's cardinality semantics: O4 asserts exactly one
-    hit per point (disaggregate.py:189-192); O6 drops misses (inner sjoin,
-    aggregate.py:121).
-    """
-    px = np.asarray(px, dtype=np.float64)
-    py = np.asarray(py, dtype=np.float64)
-    out = np.full(px.shape, -1, dtype=np.int64)
-    hits = np.zeros(px.shape, dtype=np.int64)
-    order = np.argsort(np.asarray(zone_ids, dtype=np.int64), kind="stable")
-    for k in order[::-1]:  # reverse so the FIRST (lowest id) hit wins
-        mask = points_strictly_inside(px, py, zone_xs[k], zone_ys[k])
-        out[mask] = zone_ids[k]
-        hits += mask.astype(np.int64)
-    return out, hits
-
-
 def assign_cells_rings(
     px: np.ndarray,
     py: np.ndarray,
     zone_ids: np.ndarray,
     zone_rings: list,
 ) -> np.ndarray:
-    """Ring-list version of ``assign_cells``: each point -> zone id
-    (-1 = unassigned), ascending-id application so later ids overwrite
-    (reference last-wins loop, disaggregate.py:136-145)."""
+    """Raster-rule assignment: each point -> zone id (-1 = unassigned),
+    ascending-id application so later ids overwrite (reference last-wins
+    loop, disaggregate.py:136-145)."""
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     out = np.full(px.shape, -1, dtype=np.int64)
@@ -267,9 +209,11 @@ def assign_points_within_rings(
     zone_ids: np.ndarray,
     zone_rings: list,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Ring-list version of ``assign_points_within``: (lowest-matching
-    zone id or -1, match count) per point under the strict ``within``
-    rule."""
+    """Strict-interior (``within``) assignment: (lowest-matching zone id
+    or -1, match count) per point.  The caller enforces the reference's
+    cardinality semantics: O4 asserts exactly one hit per point
+    (disaggregate.py:189-192); O6 drops misses (inner sjoin,
+    aggregate.py:121)."""
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     out = np.full(px.shape, -1, dtype=np.int64)
@@ -606,18 +550,3 @@ def intersection_area_general_rings(
         part = intersection_area_general(xs, ys, cxs, cys)
         a += -part if hole else part
     return max(a, 0.0)
-
-
-def rect_intersects_polygon(
-    xs: np.ndarray,
-    ys: np.ndarray,
-    minx: float,
-    miny: float,
-    maxx: float,
-    maxy: float,
-    pad: float = 1e-9,
-) -> bool:
-    """Conservative rect-vs-polygon intersection (false positives OK — used
-    for polyfill candidate covers that are refined by exact PIP)."""
-    cx, _cy = clip_polygon_rect(xs, ys, minx - pad, miny - pad, maxx + pad, maxy + pad)
-    return len(cx) >= 3

@@ -5,9 +5,9 @@ key (disaggregate.py:36-38, aggregate.py:136-139); here zones carry an
 explicit ``zone_id`` column/field.  Zone layers (administrative
 boundaries, segmentations) are small relative to the fact side at any
 scale — thousands to millions of vertices — so the engine keeps a
-driver-side numpy representation that ships to executors inside pandas-UDF
-closures (one Arrow-serialized broadcast per stage), plus a DataFrame form
-(``to_df`` / ``cover_df``) for the partitioned join path.
+driver-side numpy representation that ships to executors inside UDF
+closures, plus the cell cover (``cover``) that the spatial hash join
+groups by cell (operators/spatial_join.py).
 """
 
 from __future__ import annotations
@@ -44,6 +44,12 @@ class ZoneSet:
 
     def __post_init__(self) -> None:
         self.zone_ids = np.asarray(self.zone_ids, dtype=np.int64)
+        # -1 means "unassigned" to every assignment path, and geometry
+        # lookups are keyed by id
+        if (self.zone_ids < 0).any():
+            raise ValueError(f"zone ids must be >= 0, got {self.zone_ids.min()}")
+        if len(np.unique(self.zone_ids)) != len(self.zone_ids):
+            raise ValueError("zone ids must be unique")
         self.xs = [np.asarray(a, dtype=np.float64) for a in self.xs]
         self.ys = [np.asarray(a, dtype=np.float64) for a in self.ys]
         if self.extra_rings is not None:
@@ -93,9 +99,6 @@ class ZoneSet:
     def __len__(self) -> int:
         return len(self.zone_ids)
 
-    def arrays(self):
-        return self.zone_ids, self.xs, self.ys
-
     def zone_rings(self, k: int) -> list[tuple[np.ndarray, np.ndarray, bool]]:
         """All rings of the k-th zone: primary exterior + extra rings."""
         rings = [(self.xs[k], self.ys[k], False)]
@@ -131,21 +134,6 @@ class ZoneSet:
         }
 
     # -------------------------------------------------- DataFrame forms
-
-    def to_df(self, spark):
-        """DataFrame(zone_id, xs array<double>, ys array<double>, value)."""
-        rows = [
-            (
-                int(z),
-                [float(v) for v in x],
-                [float(v) for v in y],
-                float(self.values.get(int(z), float("nan"))),
-            )
-            for z, x, y in zip(self.zone_ids, self.xs, self.ys)
-        ]
-        return spark.createDataFrame(
-            rows, "zone_id long, xs array<double>, ys array<double>, value double"
-        )
 
     def values_df(self, spark, column: str = "value"):
         from .localdf import local_df
@@ -202,12 +190,3 @@ class ZoneSet:
                 h.update(np.asarray(xs, dtype=np.float64).tobytes())
                 h.update(np.asarray(ys, dtype=np.float64).tobytes())
         return h.hexdigest()
-
-    def cover_df(
-        self, spark, res: int, bounds: tuple[float, float, float, float] = C.WORLD
-    ):
-        from .localdf import local_df
-
-        return local_df(
-            spark, self.cover(res, bounds), "zone_id long, cell_id long, _full boolean"
-        )

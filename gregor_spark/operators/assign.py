@@ -6,18 +6,13 @@ per-point containment scan (disaggregate.py:184-186) / spatial join
 (aggregate.py:121): ONE vectorized pass over Arrow batches instead of an
 O(polygons) loop of full-raster masks.
 
-Two physical strategies (SURVEY.md §4):
-
-* **broadcast path** (here): zones ship inside the pandas-UDF closure —
-  zero shuffle, embarrassingly parallel over fact partitions.  Right
-  whenever the zone layer fits comfortably in executor memory (the common
-  case: admin boundaries are ~MBs against a 100 TB fact table).
-* **partitioned path** (operators/spatial_join.py): cell-cover shuffle
-  join with explicit salting, for zone layers too large or too hot to
-  broadcast.
-
-Both produce identical assignments (determinism test in
-tests/test_spatial_join.py).
+Last-id-wins raster assignment has one resolver for every path
+(operators/spatial_join.py): ``assign_cells_df`` here hands it every
+zone as a boundary candidate of one constant cell, so only ``x, y``
+cross into Python and each zone is tested exactly;
+``spatial_hash_join`` narrows the candidates by a cell cover first,
+broadcast or partitioned, for fact tables and zone layers at scale.
+All paths produce identical assignments (tests/test_spatial_join.py).
 """
 
 from __future__ import annotations
@@ -27,10 +22,12 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geo import kernels as K
 from ..model.zones import ZoneSet
+from .spatial_join import zone_id_col
 
 
 def _with_long_col(schema: T.StructType, name: str) -> T.StructType:
@@ -51,24 +48,11 @@ def assign_cells_df(
     no zone are dropped (the inner-join semantics most downstream ops
     want; reference drops them via ``dropna`` at disaggregate.py:52).
     """
-    ids = zones.zone_ids
-    rings = zones.rings_list()
     if out in df.columns:  # re-assignment replaces a stale column
         df = df.drop(out)
-    schema = _with_long_col(df.schema, out)
-    names = [f.name for f in schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            zid = K.assign_cells_rings(
-                pdf[x].to_numpy(np.float64), pdf[y].to_numpy(np.float64), ids, rings
-            )
-            res = pdf.copy()
-            res[out] = pd.array(zid, dtype="Int64")
-            res.loc[zid < 0, out] = pd.NA
-            yield res[names]
-
-    result = df.mapInPandas(run, schema=schema)
+    cover = [(int(z), 0, False) for z in zones.zone_ids]
+    zid = zone_id_col(zones, cover, F.col(x), F.col(y), F.lit(0).cast("long"))
+    result = df.withColumn(out, zid)
     if not keep_unassigned:
         result = result.filter(result[out].isNotNull())
     return result

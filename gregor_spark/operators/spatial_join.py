@@ -1,26 +1,32 @@
 """Spatial hash join — the scale path for assignment (SURVEY.md §2.2, §4).
 
-Fact rows (points / document geo-spans) and zone polygons are keyed by
-Morton cell at a chosen resolution; the join runs either:
+Fact rows (points / document geo-spans) are keyed by Morton cell at a
+chosen resolution, and the zone cover is grouped by cell once on the
+driver (``_group_cover``: each cell's candidate zones in ascending id
+order, with interior/boundary flags).  One resolver (``_resolve``) turns
+candidates into a zone id per fact: interior candidates claim outright,
+boundary ones go through the exact PIP kernel, and multi-claims resolve
+deterministically last-id-wins — never partition order (SURVEY.md §7
+hard-part (d)).  The paths differ only in where the candidates come from:
 
-* **broadcast**: ``F.broadcast(cover)`` when the zone cover is small
-  (the planner decides from the cover's size, plans/strategy.py); zero
-  fact-side shuffle; or
-* **partitioned**: shuffle join on ``cell_id`` with **explicit salting**
-  (north rule): a pre-aggregated cell histogram finds hot cells; fact
-  rows in hot cells get ``salt = pmod(hash(fact key), k)``, the cover
-  side explodes those cells ×k via ``explode(sequence(...))``.  AQE skew
+* **broadcast**: the grouped cover rides in the UDF closure and each
+  Arrow batch gathers its rows' candidates by ``searchsorted`` on
+  ``cell_id`` — zero shuffle.  The planner picks it when the cover is
+  small (plans/strategy.py).
+* **partitioned**: the grouped cover becomes one row per cell
+  (``cell_id``, ``_z`` zone ids, ``_f`` flags) and joins the facts on
+  ``cell_id``, so every fact meets its candidates in exactly one row and
+  needs no dedup.  With **explicit salting** (north rule) a pre-aggregated
+  cell histogram finds hot cells; fact rows there get ``salt =
+  pmod(hash(fact key), k)`` and the hot cover rows explode ×k.  AQE skew
   handling stays on as a second line of defense.
-
-After the equi-join, candidates are refined by the exact PIP kernel and
-multi-claims resolve deterministically last-id-wins via ``max(zone_id)``
-— never partition order (SURVEY.md §7 hard-part (d)).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -156,109 +162,97 @@ def with_cell_id(
     return df.withColumn(out, cell_id_col(F.col(x), F.col(y), res, bounds))
 
 
-def _refine_claims(
-    joined: DataFrame,
-    zones: ZoneSet,
-    x: str,
-    y: str,
-    rule: str,
-) -> DataFrame:
-    """Null-out the zone_id of candidate (point, zone) pairs that fail the
-    exact geometry kernel (instead of dropping the row — so a downstream
-    ``max(zone_id)`` groupBy yields NULL for fully-unassigned points and
-    the whole join needs no second pass over the facts).
+def _group_cover(cover_pairs: list[tuple[int, int, bool]]):
+    """The zone cover grouped by cell: ``(cells, offsets, zone_ids, full)``.
 
-    Vectorized per zone within each Arrow batch: one kernel pass per
-    DISTINCT zone present in the batch, over only that zone's candidate
-    rows — O(batch) work, no per-row Python.
-    """
+    ``cells`` are the sorted distinct cell ids; cell ``i``'s candidate
+    zones are ``zone_ids[offsets[i]:offsets[i + 1]]`` in ascending order,
+    with their interior flags in ``full`` (CSR layout)."""
+    n = len(cover_pairs)
+    zid = np.fromiter((z for z, _c, _f in cover_pairs), np.int64, n)
+    cid = np.fromiter((c for _z, c, _f in cover_pairs), np.int64, n)
+    full = np.fromiter((f for _z, _c, f in cover_pairs), bool, n)
+    order = np.lexsort((zid, cid))
+    cells, starts = np.unique(cid[order], return_index=True)
+    offsets = np.append(starts, n).astype(np.int64)
+    return cells, offsets, zid[order], full[order]
+
+
+def _resolve(xs: pa.Array, ys: pa.Array, owner, zid, full, lookup: dict, rule: str) -> pa.Array:
+    """THE claim resolver: candidate ``i`` proposes zone ``zid[i]`` for row
+    ``owner[i]``.  Full (interior) candidates claim outright; the others go
+    through the exact kernel, one pass per distinct zone.  Multi-claims
+    resolve last-id-wins (the highest claiming id) — never batch or
+    partition order.  Returns one zone id per row, NULL = unassigned."""
+    claim_fn = K.claims_raster_cell_rings if rule == "raster" else K.points_within_rings
+    # NULL coordinates become NaN, which no kernel claims
+    px = xs.to_numpy(zero_copy_only=False)
+    py = ys.to_numpy(zero_copy_only=False)
+    keep = full.copy()
+    todo = np.flatnonzero(~full)
+    todo = todo[np.argsort(zid[todo], kind="stable")]
+    zs, starts = np.unique(zid[todo], return_index=True)
+    for z, sel in zip(zs, np.split(todo, starts[1:])):
+        rows = owner[sel]
+        keep[sel] = claim_fn(px[rows], py[rows], lookup[int(z)])
+    out = np.full(len(xs), -1, dtype=np.int64)
+    np.maximum.at(out, owner[keep], zid[keep])
+    return pa.array(out, mask=out < 0, type=pa.int64())
+
+
+def zone_id_col(zones: ZoneSet, cover_pairs, x, y, cell, rule: str = "raster"):
+    """Zone id (NULL = unassigned) of each row from its ``cell`` column and
+    the ``(zone_id, cell_id, full)`` cover, which rides grouped by cell in
+    the UDF closure — map only, zero shuffle.  Arrow moves just (x, y,
+    cell); per batch one ``searchsorted`` gathers every row's candidates."""
+    cells, offsets, cand_z, cand_f = _group_cover(cover_pairs)
     lookup = zones.geometry_lookup()
 
-    # slim scalar UDF: Arrow moves ONLY (x, y, zone_id, _full) — never the
-    # fact payload (doc ids etc.); everything else stays JVM-side.
-    # Interior (_full) candidates short-circuit without touching the kernel.
-    @F.pandas_udf(T.BooleanType())
-    def claims(xs: pd.Series, ys: pd.Series, zid_s: pd.Series, full_s: pd.Series) -> pd.Series:
-        claim_fn = (
-            K.claims_raster_cell_rings if rule == "raster" else K.points_within_rings
-        )
-        notnull = zid_s.notna().to_numpy()
-        keep = full_s.fillna(False).to_numpy(bool).copy()
-        pending = notnull & ~keep
-        if pending.any():
-            px = xs.to_numpy(np.float64)
-            py = ys.to_numpy(np.float64)
-            zid = np.where(notnull, zid_s.fillna(-1).to_numpy(np.int64), -1)
-            for z in np.unique(zid[pending]):
-                m = pending & (zid == z)
-                keep[m] = claim_fn(px[m], py[m], lookup[int(z)])
-        return pd.Series(keep)
+    @F.arrow_udf(T.LongType())
+    def assign(xs: pa.Array, ys: pa.Array, cs: pa.Array) -> pa.Array:
+        n = len(cs)
+        if len(cells) == 0:
+            return pa.nulls(n, pa.int64())
+        cid = pc.fill_null(cs, -1).to_numpy()
+        pos = np.minimum(np.searchsorted(cells, cid), len(cells) - 1)
+        start = offsets[pos]
+        cnt = np.where(cells[pos] == cid, offsets[pos + 1] - start, 0)
+        owner = np.repeat(np.arange(n), cnt)
+        idx = np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt - start, cnt)
+        return _resolve(xs, ys, owner, cand_z[idx], cand_f[idx], lookup, rule)
 
-    ok = claims(F.col(x), F.col(y), F.col("zone_id"), F.col("_full"))
-    return joined.withColumn(
-        "zone_id", F.when(ok, F.col("zone_id")).otherwise(F.lit(None).cast("long"))
-    ).drop("_full")
+    return assign(x.cast("double"), y.cast("double"), cell)
 
 
-def _assign_indexed(
-    keyed: DataFrame,
-    zones: ZoneSet,
-    cover_pairs: list[tuple[int, int, bool]],
-    x: str,
-    y: str,
-    rule: str,
-) -> DataFrame:
-    """Broadcast-path assignment as ONE scalar pandas UDF — zero shuffle.
-
-    The zone cover ships in the closure as per-zone sorted cell arrays;
-    per Arrow batch each zone claims via ``searchsorted`` membership on
-    the fact's cell_id (full cells directly, boundary cells through the
-    exact kernel), ascending zone order → last-id-wins by overwrite.
-    Equivalent to join+refine+groupBy but with no join duplication and no
-    dedup shuffle: the assignment stage is map-only, so it scales with
-    cores/executors and leaves only O(tiles) rows for any downstream agg.
-    """
-    by_zone: dict[int, tuple[list[int], list[int]]] = {}
-    for zid, cid, full in cover_pairs:
-        fulls, bnds = by_zone.setdefault(zid, ([], []))
-        (fulls if full else bnds).append(cid)
-    zone_cells = [
-        (
-            zid,
-            np.sort(np.asarray(by_zone[zid][0], dtype=np.int64)),
-            np.sort(np.asarray(by_zone[zid][1], dtype=np.int64)),
-        )
-        for zid in sorted(by_zone)
-    ]
+def _candidates_col(zones: ZoneSet, x, y, rule: str):
+    """Zone id of each joined row from its per-cell candidate arrays
+    (``_z`` zone ids, ``_f`` interior flags; NULL when no cell matched)."""
     lookup = zones.geometry_lookup()
 
-    def _member(cells: np.ndarray, sorted_cells: np.ndarray) -> np.ndarray:
-        if len(sorted_cells) == 0:
-            return np.zeros(len(cells), dtype=bool)
-        idx = np.searchsorted(sorted_cells, cells)
-        idx = np.clip(idx, 0, len(sorted_cells) - 1)
-        return sorted_cells[idx] == cells
+    @F.arrow_udf(T.LongType())
+    def assign(xs: pa.Array, ys: pa.Array, zs: pa.Array, fs: pa.Array) -> pa.Array:
+        cnt = pc.list_value_length(zs).fill_null(0).to_numpy()
+        owner = np.repeat(np.arange(len(zs)), cnt)
+        zid = zs.flatten().to_numpy()
+        full = fs.flatten().to_numpy(zero_copy_only=False)
+        return _resolve(xs, ys, owner, zid, full, lookup, rule)
 
-    @F.pandas_udf(T.LongType())
-    def assign(xs: pd.Series, ys: pd.Series, cell_s: pd.Series) -> pd.Series:
-        claim_fn = (
-            K.claims_raster_cell_rings if rule == "raster" else K.points_within_rings
+    return assign(x.cast("double"), y.cast("double"), F.col("_z"), F.col("_f"))
+
+
+def _cover_df(spark, cover_pairs) -> DataFrame:
+    """One row per cover cell: (cell_id, _z array<long>, _f array<boolean>)."""
+    cells, offsets, zid, full = _group_cover(cover_pairs)
+    off = pa.array(offsets.astype(np.int32))
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "cell_id": pa.array(cells, pa.int64()),
+                "_z": pa.ListArray.from_arrays(off, pa.array(zid, pa.int64())),
+                "_f": pa.ListArray.from_arrays(off, pa.array(full, pa.bool_())),
+            }
         )
-        cells = cell_s.to_numpy(np.int64)
-        px = xs.to_numpy(np.float64)
-        py = ys.to_numpy(np.float64)
-        out = np.full(len(cells), -1, dtype=np.int64)
-        for zid, fulls, bnds in zone_cells:
-            claimed = _member(cells, fulls)
-            bmask = _member(cells, bnds)
-            if bmask.any():
-                claimed[bmask] = claim_fn(px[bmask], py[bmask], lookup[zid])
-            out[claimed] = zid
-        res = pd.Series(out, dtype="Int64")
-        res[out < 0] = pd.NA
-        return res
-
-    return keyed.withColumn("zone_id", assign(F.col(x), F.col(y), F.col("cell_id")))
+    )
 
 
 def hot_cells(
@@ -290,8 +284,9 @@ def spatial_hash_join(
 ) -> DataFrame:
     """Assign each fact row to a zone via the cell-keyed join.
 
-    Returns ``facts`` columns + ``zone_id`` (last-id-wins).  With
-    ``keep_unassigned``, unmatched rows carry NULL zone_id (left join).
+    Returns ``facts`` columns + ``cell_id`` + ``zone_id`` (last-id-wins),
+    one row per fact row.  With ``keep_unassigned``, unmatched rows carry
+    NULL zone_id.
 
     ``broadcast_cover=None`` lets the planner decide (plans/strategy.py);
     ``salt_threshold`` enables explicit hot-cell salting on the
@@ -300,24 +295,11 @@ def spatial_hash_join(
     """
     from ..plans.strategy import choose_broadcast
 
-    from ..model.localdf import local_df
-
-    spark = facts.sparkSession
     cover_pairs = zones.cover(res, bounds)
     if broadcast_cover is None:
         broadcast_cover = choose_broadcast(n_cover_rows=len(cover_pairs))
-    # the broadcast path ships cover_pairs in the UDF closure and never
-    # touches a cover DataFrame — only build it for the join paths
-    cover = (
-        None
-        if broadcast_cover
-        else local_df(
-            spark, cover_pairs, "zone_id long, cell_id long, _full boolean"
-        )
-    )
-
     keyed = with_cell_id(facts, res, bounds, x=x, y=y)
-    fact_cols = facts.columns
+    fact_cols = keyed.columns
     how = "left" if keep_unassigned else "inner"
     # NB: the skew histogram makes `keyed` dual-consumed, but it is NOT
     # persisted: the encode is pure codegen, so recomputing the scan
@@ -326,10 +308,14 @@ def spatial_hash_join(
     # with task threads (measured: 85 s at local[32] vs 4 s recompute).
 
     if broadcast_cover:
-        assigned = _assign_indexed(keyed, zones, cover_pairs, x, y, rule)
+        zid = zone_id_col(zones, cover_pairs, F.col(x), F.col(y), F.col("cell_id"), rule)
+        assigned = keyed.withColumn("zone_id", zid)
         if not keep_unassigned:
             assigned = assigned.filter(F.col("zone_id").isNotNull())
         return assigned
+    # one cover row per cell (per (cell, salt) when salted): the join gives
+    # exactly one row per fact, so claims resolve with no dedup
+    cover = _cover_df(facts.sparkSession, cover_pairs)
     if salt_threshold is not None:
         hot = hot_cells(keyed, salt_threshold).drop("_n")
         salt_src = F.col(fact_key) if fact_key else F.monotonically_increasing_id()
@@ -357,22 +343,8 @@ def spatial_hash_join(
     else:
         joined = keyed.join(cover, "cell_id", how)
 
-    candidates = _refine_claims(joined, zones, x=x, y=y, rule=rule)
-    # deterministic last-id-wins across multi-zone claims (max ignores the
-    # nulled-out failed candidates); cell_id (a pure function of x,y) rides
-    # along so callers need no second encode pass.  ONE join + ONE groupBy
-    # over the facts — keep_unassigned costs nothing extra (left join +
-    # NULL zone_id), no second pass; interior-cell candidates short-circuit
-    # inside the refine UDF (no kernel work, no plan branch).
-    # MEASURED (r2, 2M docs, local[32]): splitting interior/boundary into
-    # two plan branches before the UDF — union(filter(_full),
-    # refine(filter(~_full))) — ran 3.6× SLOWER (43 s vs 12 s): the
-    # branches recompute the salted fact shuffle instead of reusing the
-    # exchange.  The slim in-UDF short-circuit (Arrow ships only
-    # x,y,zone_id,_full) is the right shape; don't re-split.
-    assigned = candidates.groupBy(*fact_cols, "cell_id").agg(
-        F.max("zone_id").alias("zone_id")
-    )
+    zid = _candidates_col(zones, F.col(x), F.col(y), rule)
+    assigned = joined.select(*fact_cols, zid.alias("zone_id"))
     if not keep_unassigned:
         assigned = assigned.filter(F.col("zone_id").isNotNull())
     return assigned

@@ -1,7 +1,8 @@
 """Explicit physical-strategy decisions the north rule demands the engine
-own (SURVEY.md §4): broadcast-vs-partitioned spatial join, cell-resolution
-choice, and salting parameters.  Catalyst/AQE still optimize everything
-else (pushdown, pruning, codegen, runtime coalesce/skew-split)."""
+own (SURVEY.md §4): broadcast-vs-partitioned spatial join and cell-resolution
+choice; salting parameters come from the callers.  Catalyst/AQE still
+optimize everything else (pushdown, pruning, codegen, runtime
+coalesce/skew-split)."""
 
 from __future__ import annotations
 
@@ -33,11 +34,3 @@ def choose_resolution(
     want = typical_zone_extent / math.sqrt(target_cells_per_zone)
     res = max(0, min(26, int(math.ceil(math.log2(world / max(want, 1e-12))))))
     return res
-
-
-def salt_params(hot_count: int, partitions: int) -> tuple[int, int]:
-    """(threshold, factor): cells holding more than ~2 average partitions'
-    worth of rows get spread across ``factor`` salts."""
-    threshold = max(10_000, 2 * hot_count // max(partitions, 1))
-    factor = min(64, max(2, partitions // 4))
-    return threshold, factor

@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 
 from ..geo import cells as C
 from ..model.zones import ZoneSet
-from ..operators.spatial_join import _assign_indexed, with_cell_id
+from ..operators.spatial_join import with_cell_id, zone_id_col
 from ..operators.tiles import extract_geo_points
 from ..sources.documents import SPAN_SCHEMA
 
@@ -73,9 +73,10 @@ def tile_counts_stream(
     )
     keyed = with_cell_id(pts, res, bounds, x="lon", y="lat")
     if zones is not None:
-        keyed = _assign_indexed(
-            keyed, zones, zones.cover(res, bounds), "lon", "lat", "raster"
+        zid = zone_id_col(
+            zones, zones.cover(res, bounds), F.col("lon"), F.col("lat"), F.col("cell_id")
         )
+        keyed = keyed.withColumn("zone_id", zid)
     group_cols = [F.window("ts", window).alias("win"), F.col("cell_id")]
     if zones is not None:
         group_cols.append(F.col("zone_id"))

@@ -74,8 +74,10 @@ def main() -> None:
             "Partitioned spatial join with explicit hot-cell salting",
             "The shuffle path for un-broadcastable covers: explicit "
             "histogram (partial-agg), fact-side pmod(hash, k) salt, hot "
-            "cover rows exploded ×k, slim refine UDF over (x, y, zone_id, "
-            "full) only, then ONE groupBy resolving last-id-wins.",
+            "cover rows (one per cell, candidate zones as arrays) exploded "
+            "×k, then ONE join that meets each fact's candidates in one "
+            "row and a slim resolver UDF over (x, y, _z, _f) only — no "
+            "groupBy.",
             formatted(
                 spatial_hash_join(
                     cells, ZoneSet.from_fixture(FX.SEG_2X2), 6, bounds,

@@ -97,6 +97,25 @@ def test_rejects_non_polygon():
         zoneset_from_geojson({"type": "Feature"})
 
 
+
+def test_rejects_negative_zone_id():
+    """-1 means "unassigned" to every assignment path, so a negative id
+    from outside the program is refused at the ZoneSet boundary."""
+    with pytest.raises(ValueError, match=">= 0"):
+        zoneset_from_geojson(_fc([_poly_feature(-3, [UNIT])]))
+
+
+def test_sidecar_rejects_duplicate_zone_id(tmp_path):
+    """A repeated id would collapse in the id-keyed geometry lookup and
+    refine boundary facts against the wrong polygon."""
+    from gregor_spark.cli import _load_zones
+
+    ring = {"xs": [0.0, 1.0, 1.0, 0.0], "ys": [0.0, 0.0, 1.0, 1.0]}
+    path = tmp_path / "zones.json"
+    path.write_text(json.dumps([{"zone_id": 4, **ring}, {"zone_id": 4, **ring}]))
+    with pytest.raises(ValueError, match="unique"):
+        _load_zones(str(path))
+
 def test_roundtrip_lossless():
     from gregor_spark.model import fixtures as FX
     from gregor_spark.model.zones import ZoneSet

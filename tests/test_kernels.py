@@ -9,12 +9,18 @@ from gregor_spark.geo import kernels as K
 from gregor_spark.model import fixtures as FX
 
 
+def _rings_of(zones):
+    from gregor_spark.model.zones import ZoneSet
+
+    return ZoneSet.from_fixture(zones).rings_list()
+
+
 def _assign_matrix(zones):
-    ids, xs, ys = FX.zones_arrays(zones)
+    ids, _, _ = FX.zones_arrays(zones)
     cells = FX.raster_long_form()
     px = np.array([c[2] for c in cells])
     py = np.array([c[3] for c in cells])
-    got = K.assign_cells(px, py, ids, xs, ys)
+    got = K.assign_cells_rings(px, py, ids, _rings_of(zones))
     return got.reshape(4, 4)
 
 
@@ -62,30 +68,24 @@ def test_disaggregation_grid_2x2():
 def test_points_within_assignment():
     """All 10 fixture points land in zones 0/2/3 (zone 1 empty), each in
     exactly one zone — the O4 cardinality assert (disaggregate.py:189-192)."""
-    ids, xs, ys = FX.zones_arrays(FX.SEG_2X2)
+    ids, _, _ = FX.zones_arrays(FX.SEG_2X2)
     px = np.array([p[1] for p in FX.POINTS])
     py = np.array([p[2] for p in FX.POINTS])
-    zid, hits = K.assign_points_within(px, py, ids, xs, ys)
+    zid, hits = K.assign_points_within_rings(px, py, ids, _rings_of(FX.SEG_2X2))
     assert (hits == 1).all()
     assert set(zid.tolist()) == {0, 2, 3}
 
 
 def test_point_disaggregation_conservation():
-    ids, xs, ys = FX.zones_arrays(FX.SEG_2X2)
+    ids, _, _ = FX.zones_arrays(FX.SEG_2X2)
     values = {0: 1.0, 1: 3.0, 2: 5.0, 3: 7.0}
     px = np.array([p[1] for p in FX.POINTS])
     py = np.array([p[2] for p in FX.POINTS])
     w = np.array([p[3] for p in FX.POINTS])
-    zid, _ = K.assign_points_within(px, py, ids, xs, ys)
+    zid, _ = K.assign_points_within_rings(px, py, ids, _rings_of(FX.SEG_2X2))
     norms = {z: w[zid == z].sum() for z in set(zid.tolist())}
     disagg = np.array([values[z] * wi / norms[z] for z, wi in zip(zid, w)])
     assert disagg.sum() == pytest.approx(FX.GOLDEN_POINT_DISAGG_TOTAL)
-
-
-def _rings_of(zones):
-    from gregor_spark.model.zones import ZoneSet
-
-    return ZoneSet.from_fixture(zones).rings_list()
 
 
 def test_belongs_to_holed():
@@ -97,21 +97,6 @@ def test_belongs_to_holed():
     rings = _rings_of(FX.SEG_HOLED)
     got = K.assign_cells_rings(px, py, np.array([0]), rings).reshape(4, 4)
     np.testing.assert_array_equal(got, _golden_to_array(FX.GOLDEN_BELONGS_HOLED))
-
-
-def test_holed_single_ring_consistency():
-    """Ring-list kernels reproduce the single-ring goldens exactly."""
-    cells = FX.raster_long_form()
-    px = np.array([c[2] for c in cells])
-    py = np.array([c[3] for c in cells])
-    for seg, golden in (
-        (FX.SEG_2X2, FX.GOLDEN_BELONGS_2X2),
-        (FX.SEG_3X3, FX.GOLDEN_BELONGS_3X3),
-        (FX.SEG_OVERLAP, FX.GOLDEN_BELONGS_OVERLAP),
-    ):
-        ids, _, _ = FX.zones_arrays(seg)
-        got = K.assign_cells_rings(px, py, ids, _rings_of(seg)).reshape(4, 4)
-        np.testing.assert_array_equal(got, _golden_to_array(golden))
 
 
 def test_multipart_zone():

@@ -5,6 +5,7 @@ must hold, not just be hoped for (task brief: `.explain` and iterate).
 * column pruning keeps unused columns out of ReadSchema;
 * norm/zone joins in disaggregation go broadcast (no fact shuffle);
 * the broadcast assignment path contains NO Exchange at all (map-only);
+* the partitioned assignment path contains no aggregate;
 * Morton encode runs inside WholeStageCodegen (no BatchEvalPython).
 """
 
@@ -75,6 +76,17 @@ def test_broadcast_assignment_is_map_only(spark, parquet_cells):
     # zero shuffle: the whole assignment is scan -> project -> eval python
     assert "Exchange" not in plan, plan
 
+
+
+def test_partitioned_assignment_has_no_aggregate(spark, parquet_cells):
+    """The partitioned join meets each fact's candidates in one row (the
+    cover is grouped by cell), so claims resolve without a groupBy."""
+    zones = ZoneSet.from_fixture(FX.SEG_2X2)
+    assigned = spatial_hash_join(
+        parquet_cells, zones, 6, BOUNDS, broadcast_cover=False, keep_unassigned=True
+    )
+    plan = _formatted(assigned)
+    assert "HashAggregate" not in plan, plan
 
 def test_morton_encode_is_codegen(spark, parquet_cells):
     plan = _formatted(with_cell_id(parquet_cells, 8, BOUNDS))

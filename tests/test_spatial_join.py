@@ -51,7 +51,7 @@ def test_paths_agree(spark, pts):
         )
     )
     assert broadcast == partitioned == salted
-    # and the join agrees with the direct mapInPandas kernel path
+    # and the join agrees with the cover-free assign_cells_df path
     direct = assign_cells_df(pts, zones, keep_unassigned=False)
     assert _as_map(direct) == broadcast
 
@@ -156,3 +156,75 @@ def test_assign_tiles_auto_resolution(spark):
     }
     fixed = assign_tiles(docs, RES, BOUNDS, zones=zones, keep_unassigned=True)
     assert key(auto) == key(fixed)  # zone assignment is res-invariant
+
+
+BIG = (1 << 53) + 1  # zone ids float64 cannot hold exactly
+
+
+def _big_ids(zones):
+    return ZoneSet(zones.zone_ids + BIG, zones.xs, zones.ys, extra_rings=zones.extra_rings)
+
+
+ADVERSARIAL_LAYERS = {
+    "overlap": lambda: _big_ids(ZoneSet.from_fixture(FX.SEG_OVERLAP)),
+    # every zone outside the bounds: the cover is empty
+    "outside": lambda: ZoneSet.from_bboxes(
+        [(BIG, 100.0, 100.0, 101.0, 101.0), (BIG + 7, 200.0, 200.0, 201.0, 201.0)]
+    ),
+}
+
+
+def _run_path(path, facts, zones):
+    if path == "assign_cells_df":
+        return assign_cells_df(facts, zones)
+    kw = {
+        "broadcast": {"broadcast_cover": True},
+        "partitioned": {"broadcast_cover": False},
+        "salted": {
+            "broadcast_cover": False, "salt_threshold": 0, "salt_factor": 4,
+            "fact_key": "id",
+        },
+    }[path]
+    return spatial_hash_join(facts, zones, RES, BOUNDS, keep_unassigned=True, **kw)
+
+
+@pytest.mark.parametrize("layer", sorted(ADVERSARIAL_LAYERS))
+@pytest.mark.parametrize(
+    "path", ["broadcast", "partitioned", "salted", "assign_cells_df"]
+)
+def test_paths_agree_on_adversarial_facts(spark, path, layer):
+    """Every assignment path returns the exact kernel's (id, zone_id)
+    multiset on duplicated fact rows, a NULL coordinate, points far
+    outside the bounds, zone ids above 2^53 and an empty cover."""
+    from collections import Counter
+
+    import numpy as np
+
+    from gregor_spark.geo import kernels as K
+
+    zones = ADVERSARIAL_LAYERS[layer]()
+    rng = np.random.RandomState(5)
+    rows = [
+        (i, float(x), float(y))
+        for i, (x, y) in enumerate(zip(rng.uniform(-0.25, 1.75, 300), rng.uniform(9.75, 11.75, 300)))
+    ]
+    rows += rows[:3] + rows[:1]  # identical fact rows, one of them three times
+    rows += [
+        (900, None, 10.5),
+        (901, 1e9, 1e9),
+        (902, -1e9, -1e9),
+        (903, 1e9, 10.5),
+        (904, 0.5, -1e9),
+    ]
+    facts = spark.createDataFrame(rows, "id long, x double, y double")
+    px = np.array([np.nan if x is None else x for _i, x, _y in rows])
+    py = np.array([y for _i, _x, y in rows])
+    want = K.assign_cells_rings(px, py, zones.zone_ids, zones.rings_list())
+    expected = Counter(
+        (i, None if z < 0 else int(z)) for (i, _x, _y), z in zip(rows, want)
+    )
+    got = Counter(
+        (r["id"], r["zone_id"])
+        for r in _run_path(path, facts, zones).select("id", "zone_id").collect()
+    )
+    assert got == expected

@@ -4,7 +4,6 @@ from gregor_spark.plans.strategy import (
     BROADCAST_MAX_COVER_ROWS,
     choose_broadcast,
     choose_resolution,
-    salt_params,
 )
 
 
@@ -29,8 +28,3 @@ def test_choose_resolution_monotone():
     )
     assert more >= fewer
 
-
-def test_salt_params_sane():
-    threshold, factor = salt_params(hot_count=10_000_000, partitions=64)
-    assert threshold >= 10_000
-    assert 2 <= factor <= 64
