@@ -4,10 +4,15 @@ metrics").
 
 A pipeline is a sequence of named stages.  Each stage's output is written
 to ``<root>/<stage>/data`` (parquet) with a ``_stage_manifest.json``
-recording input snapshot, per-spark-partition row counts (the lineage),
-wall time, and a DONE marker.  ``run_stage`` skips stages whose manifest
-is already complete — a restarted driver resumes exactly after the last
-finished stage, reading its predecessor's parquet instead of recomputing.
+recording per-spark-partition row counts (the lineage), wall time, and a
+DONE marker.  The lineage is read from the parquet footers of the files
+the write just produced — Spark names each task's file
+``part-<partition id>-…`` — so it costs no Spark job and adds no column
+to the stage output.  The manifest swap is atomic (temp file +
+``os.replace``): a crash mid-commit leaves no manifest, never a torn one.
+``run_stage`` skips stages whose manifest is already complete — a
+restarted driver resumes exactly after the last finished stage, reading
+its predecessor's parquet instead of recomputing.
 
 This is deliberately storage-level resume (the only kind that survives a
 driver loss), not Spark's in-session ``.checkpoint()``.
@@ -21,7 +26,8 @@ import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..sources.iceberg_like import _data_files, _swap_manifest
 
 STAGE_MANIFEST = "_stage_manifest.json"
 
@@ -43,49 +49,37 @@ class CheckpointedRun:
             m = json.load(f)
         return m if m.get("done") else None
 
-    def run_stage(
-        self,
-        name: str,
-        build: Callable[[], DataFrame],
-        partition_by: str | None = None,
-    ) -> DataFrame:
+    def run_stage(self, name: str, build: Callable[[], DataFrame]) -> DataFrame:
         """Produce stage ``name``: reuse the checkpointed output if its
         manifest is complete, else build → write → manifest.
 
-        Lineage/metrics captured per spark partition via
-        ``spark_partition_id()`` *before* the write (one extra narrow
-        column, no extra pass)."""
+        The write is the stage's only Spark job.  ``partition_rows`` sums
+        the footer row counts of each task's ``part-<partition id>-…``
+        files; partitions that wrote no rows are absent.  The returned
+        frame reads the written files with the build's schema (no
+        schema-inference job)."""
         sdir = self._stage_dir(name)
         data = os.path.join(sdir, "data")
-        existing = self.stage_manifest(name)
-        if existing is not None:
+        if self.stage_manifest(name) is not None:
             return self.spark.read.parquet(data)
 
         t0 = time.time()
-        df = build().withColumn("_part", F.spark_partition_id())
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(data)
-        written = self.spark.read.parquet(data)
-        part_counts = {
-            str(r["_part"]): r["n"]
-            for r in written.groupBy("_part").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        df = build()
+        df.write.mode("overwrite").parquet(data)
+        part_counts: dict[str, int] = {}
+        for fname, n in _data_files(data):
+            part = str(int(fname.split("-")[1]))
+            part_counts[part] = part_counts.get(part, 0) + n
         manifest = {
             "stage": name,
             "done": True,
             "wall_sec": round(time.time() - t0, 3),
-            "rows": int(sum(part_counts.values())),
+            "rows": sum(part_counts.values()),
             "partition_rows": part_counts,
             "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        os.makedirs(sdir, exist_ok=True)
-        with open(os.path.join(sdir, STAGE_MANIFEST), "w") as f:
-            json.dump(manifest, f, indent=1)
-        # `_part` stays in the output (the resume path re-reads it anyway);
-        # downstream stages simply ignore the lineage column
-        return written
+        _swap_manifest(sdir, manifest, STAGE_MANIFEST)
+        return self.spark.read.schema(df.schema).parquet(data)
 
     def metrics(self) -> dict:
         out = {}

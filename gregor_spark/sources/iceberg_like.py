@@ -26,49 +26,121 @@ from pyspark.sql import functions as F
 MANIFEST = "_gregor_manifest.json"
 
 
-def _walk_data_files(path: str, part_col: str) -> list[tuple[str, int]]:
-    """(relative file path, footer row count) for every parquet data file
-    under the partition dirs — the unit an Iceberg manifest tracks."""
+def _data_files(root: str) -> list[tuple[str, int]]:
+    """(path relative to ``root``, footer row count) for every non-empty
+    parquet data file under a written dir, in sorted walk order — the
+    unit an Iceberg manifest tracks.  Footers only: zero Spark jobs and
+    no data pages read (a footer is a few KB regardless of file size),
+    which is what a real Iceberg writer records at commit time instead
+    of re-scanning what it just wrote.  Spark-hidden ``_``/``.`` entries
+    (``_SUCCESS``, staging and delete dirs) are skipped, and so are
+    zero-row files (an empty write still leaves one ``part-00000``)."""
     import pyarrow.parquet as pq
 
     files: list[tuple[str, int]] = []
-    prefix = f"{part_col}="
-    for dirname in sorted(os.listdir(path)):
-        if not dirname.startswith(prefix):
-            continue
-        pdir = os.path.join(path, dirname)
-        for fname in sorted(os.listdir(pdir)):
-            if fname.endswith(".parquet"):
-                full = os.path.join(pdir, fname)
-                files.append(
-                    (os.path.join(dirname, fname), pq.ParquetFile(full).metadata.num_rows)
-                )
+    for dirpath, dirnames, fnames in os.walk(root):
+        dirnames[:] = sorted(d for d in dirnames if not d.startswith(("_", ".")))
+        for fname in sorted(fnames):
+            if fname.endswith(".parquet") and not fname.startswith(("_", ".")):
+                full = os.path.join(dirpath, fname)
+                n = pq.ParquetFile(full).metadata.num_rows
+                if n:
+                    files.append((os.path.relpath(full, root), n))
     return files
 
 
-def _footer_partition_counts(path: str, part_col: str) -> dict[str, int]:
-    """Per-partition row counts straight from the parquet FOOTERS of the
-    files just written — zero Spark jobs and zero data reads (a footer is
-    a few KB regardless of file size).  This is exactly what a real
-    Iceberg writer records in its manifests at commit time; re-scanning
-    the table it just wrote (the round-1 shape) costs one extra O(table)
-    job per write.  Local-FS walk here; on an object store the same
-    footer read happens via the FileSystem API."""
-    import pyarrow.parquet as pq
-
+def _dir_rows(files) -> dict[str, int]:
+    """Rows per ``<col>=<value>`` partition dir, keyed by the value."""
     counts: dict[str, int] = {}
-    prefix = f"{part_col}="
-    for dirname in sorted(os.listdir(path)):
-        if not dirname.startswith(prefix):
-            continue
-        key = dirname[len(prefix):]
-        n = 0
-        pdir = os.path.join(path, dirname)
-        for fname in os.listdir(pdir):
-            if fname.endswith(".parquet"):
-                n += pq.ParquetFile(os.path.join(pdir, fname)).metadata.num_rows
-        counts[key] = n
+    for rel, n in files:
+        key = os.path.dirname(rel).split("=", 1)[1]
+        counts[key] = counts.get(key, 0) + n
     return counts
+
+
+def _swap_manifest(d: str, m: dict, name: str = MANIFEST) -> None:
+    """The only manifest writer: temp file + ``os.replace``, so a reader
+    sees the previous manifest or the new one, never a torn one."""
+    tmp = os.path.join(d, name + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(m, f, indent=1)
+    os.replace(tmp, os.path.join(d, name))
+
+
+def _current(path: str) -> tuple[dict, dict]:
+    """(manifest, current snapshot); raises on a pre-v2 manifest."""
+    m = read_manifest(path)
+    if not m.get("snapshots"):
+        raise ValueError("table has no snapshot history (pre-v2 manifest)")
+    return m, _resolve_snapshot(m, m["current_snapshot_id"], None)
+
+
+def _next_id(m: dict) -> int:
+    """Monotonic snapshot id: wall ms, bumped past the last snapshot."""
+    now_ms = int(time.time() * 1000)
+    snaps = m.get("snapshots")
+    return max(now_ms, snaps[-1]["snapshot_id"] + 1) if snaps else now_ms
+
+
+def _commit(
+    path: str,
+    m: dict,
+    files: list[dict],
+    operation: str,
+    snap_id: int,
+    delete_files=(),
+) -> dict:
+    """The only snapshot builder: append a snapshot listing ``files``
+    (and ``delete_files``, when any) to ``m``, point the top-level
+    current fields at it, and swap the manifest atomically.  Returns the
+    snapshot."""
+    total = sum(f["rows"] for f in files)
+    snapshot = {
+        "snapshot_id": snap_id,
+        "timestamp_ms": int(time.time() * 1000),
+        "operation": operation,
+        "files": files,
+        "total_rows": total,
+    }
+    if delete_files:
+        snapshot["delete_files"] = list(delete_files)
+    m["snapshots"] = m.get("snapshots", []) + [snapshot]
+    m["snapshot_id"] = snap_id  # current (legacy top-level field)
+    m["current_snapshot_id"] = snap_id
+    m["bucket_rows"] = _dir_rows((f["path"], f["rows"]) for f in files)
+    m["total_rows"] = total
+    _swap_manifest(path, m)
+    return snapshot
+
+
+def _stage(
+    path: str, out: DataFrame, tmp: str, tag: str, snap_id: int, check=None
+) -> list[dict]:
+    """Stage ``out`` (bucket column included) in ``<path>/<tmp>`` —
+    invisible to readers, no manifest references it — then move its
+    non-empty files into the bucket dirs as ``<tag>-<snap_id>-<i>``.
+    ``check(staged_rows)`` runs on the staged footers before any file
+    moves, so a failed check leaves only the staging dir behind
+    (``remove_orphan_files`` reclaims it).  Returns the moved files as
+    manifest entries stamped with ``snap_id``."""
+    import shutil
+
+    staging = os.path.join(path, tmp)
+    out.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+    staged = _data_files(staging)
+    if check is not None:
+        check(sum(n for _rel, n in staged))
+    moved: list[dict] = []
+    per_dir: dict[str, int] = {}
+    for rel, n in staged:
+        dirname = os.path.dirname(rel)
+        i = per_dir[dirname] = per_dir.get(dirname, -1) + 1
+        dest = os.path.join(dirname, f"{tag}-{snap_id}-{i:05d}.parquet")
+        os.makedirs(os.path.join(path, dirname), exist_ok=True)
+        os.replace(os.path.join(staging, rel), os.path.join(path, dest))
+        moved.append({"path": dest, "rows": n, "seq": snap_id})
+    shutil.rmtree(staging)
+    return moved
 
 
 def write_table(
@@ -104,54 +176,31 @@ def write_table(
     # in Iceberg.
     out = out.repartition(n_buckets, F.col("bucket"))
     out.write.mode(mode).partitionBy("bucket").parquet(path)
-    all_files = _walk_data_files(path, "bucket")
-    now_ms = int(time.time() * 1000)
-    snap_id = max(now_ms, (prior[-1]["snapshot_id"] + 1) if prior else 0)
-    if prior:
-        # an appending commit = the current snapshot's files plus whatever
-        # the write just added — NOT a blind directory walk, which would
-        # resurrect files kept on disk only for older snapshots' time
-        # travel (e.g. pre-compaction small files awaiting expiry).
-        # Inherited entries keep their data sequence number ("seq" —
-        # missing on pre-r7 entries means 0); new files stamp this
-        # commit's, so merge-on-read equality deletes scope correctly.
-        known = {f["path"] for s in prior for f in s["files"]}
-        files = [dict(f) for f in prior[-1]["files"]] + [
-            {"path": p, "rows": n, "seq": snap_id}
-            for p, n in all_files
-            if p not in known
-        ]
-    else:
-        files = [{"path": p, "rows": n, "seq": snap_id} for p, n in all_files]
-    counts: dict[str, int] = {}
-    for f in files:
-        key = os.path.dirname(f["path"]).split("=", 1)[1]
-        counts[key] = counts.get(key, 0) + f["rows"]
-    snapshot = {
-        "snapshot_id": snap_id,
-        "timestamp_ms": now_ms,
-        "operation": mode,
-        "files": files,
-        "total_rows": sum(f["rows"] for f in files),
-    }
-    if prior and prior[-1].get("delete_files"):
-        # merge-on-read deletes keep applying to the files they were
-        # committed against; an append inherits them untouched
-        snapshot["delete_files"] = list(prior[-1]["delete_files"])
     manifest = {
         "format": "gregor-iceberg-like/2",
-        "snapshot_id": snap_id,            # current (legacy top-level field)
         "schema": df.schema.jsonValue(),
         "partition_spec": {"bucket_by": bucket_by, "n_buckets": n_buckets},
-        "bucket_rows": counts,
-        "total_rows": sum(counts.values()),
-        "snapshots": prior + [snapshot],
-        "current_snapshot_id": snap_id,
+        "snapshots": prior,
     }
-    tmp = os.path.join(path, MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-    os.replace(tmp, os.path.join(path, MANIFEST))  # atomic commit
+    snap_id = _next_id(manifest)
+    # an appending commit = the current snapshot's files plus whatever
+    # the write just added — NOT a blind directory walk, which would
+    # resurrect files kept on disk only for older snapshots' time
+    # travel (e.g. pre-compaction small files awaiting expiry).
+    # Inherited entries keep their data sequence number ("seq" —
+    # missing on pre-r7 entries means 0); new files stamp this
+    # commit's, so merge-on-read equality deletes scope correctly.
+    known = {f["path"] for s in prior for f in s["files"]}
+    files = [dict(f) for f in prior[-1]["files"]] if prior else []
+    files += [
+        {"path": p, "rows": n, "seq": snap_id}
+        for p, n in _data_files(path)
+        if p not in known
+    ]
+    # merge-on-read deletes keep applying to the files they were
+    # committed against; an append inherits them untouched
+    dels = prior[-1].get("delete_files", ()) if prior else ()
+    _commit(path, manifest, files, mode, snap_id, dels)
     return manifest
 
 
@@ -317,17 +366,10 @@ def compact_table(spark: SparkSession, path: str) -> dict:
     snapshot-unique names, then atomically swap the manifest.  A crash
     before the swap leaves only unreferenced stray files (re-run to
     clean), never a half-visible compaction.  Row-count parity between
-    the old and new file sets is asserted from parquet footers before
-    the commit."""
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    m = read_manifest(path)
-    snaps = m.get("snapshots", [])
-    if not snaps:
-        raise ValueError("table has no snapshot history (pre-v2 manifest)")
-    cur = _resolve_snapshot(m, m["current_snapshot_id"], None)
+    the old and new file sets is checked on the staged footers before any
+    file moves; a mismatch raises ``RuntimeError`` and leaves only the
+    ``_compact_tmp`` staging dir (``remove_orphan_files`` reclaims it)."""
+    m, cur = _current(path)
     n_buckets = m["partition_spec"]["n_buckets"]
     src = [os.path.join(path, f["path"]) for f in cur["files"]]
     src_df = spark.read.option("basePath", path).parquet(*src)
@@ -337,67 +379,35 @@ def compact_table(spark: SparkSession, path: str) -> dict:
         # through the anti-joins, so the compacted snapshot carries no
         # delete files and readers pay nothing again
         src_df = _apply_mor_deletes(spark, path, cur, src_df)
-    tmp = os.path.join(path, "_compact_tmp")
-    (
-        src_df
-        .repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(tmp)
-    )
-    now_ms = int(time.time() * 1000)
-    snap_id = max(now_ms, snaps[-1]["snapshot_id"] + 1)
-    new_files: list[tuple[str, int]] = []
-    for dirname in sorted(os.listdir(tmp)):
-        if not dirname.startswith("bucket="):
-            continue
-        os.makedirs(os.path.join(path, dirname), exist_ok=True)
-        parts = sorted(
-            f for f in os.listdir(os.path.join(tmp, dirname)) if f.endswith(".parquet")
-        )
-        for i, fname in enumerate(parts):
-            rel = os.path.join(dirname, f"compact-{snap_id}-{i:05d}.parquet")
-            os.replace(os.path.join(tmp, dirname, fname), os.path.join(path, rel))
-            new_files.append(
-                (rel, pq.ParquetFile(os.path.join(path, rel)).metadata.num_rows)
+
+    def parity(staged: int) -> None:
+        if has_dels:
+            # with folded deletes the exact survivor count is only known
+            # post-write; it can only shrink
+            if staged > cur["total_rows"]:
+                raise RuntimeError(
+                    f"compaction grew rows: {staged} > {cur['total_rows']}"
+                )
+        elif staged != cur["total_rows"]:
+            raise RuntimeError(
+                f"compaction row drift: {staged} != {cur['total_rows']}"
             )
-    shutil.rmtree(tmp)
-    new_total = sum(n for _p, n in new_files)
-    if has_dels:
-        # with folded deletes the exact survivor count is only known
-        # post-write; it can only shrink
-        assert new_total <= cur["total_rows"], (
-            f"compaction grew rows: {new_total} > {cur['total_rows']}"
-        )
-    else:
-        assert new_total == cur["total_rows"], (
-            f"compaction row drift: {new_total} != {cur['total_rows']}"
-        )
-    snapshot = {
-        "snapshot_id": snap_id,
-        "timestamp_ms": now_ms,
-        "operation": "compact",
-        "files": [{"path": p, "rows": n, "seq": snap_id} for p, n in new_files],
-        "total_rows": new_total,
-    }
-    counts: dict[str, int] = {}
-    for p, n in new_files:
-        key = os.path.dirname(p).split("=", 1)[1]
-        counts[key] = counts.get(key, 0) + n
-    m["snapshots"] = snaps + [snapshot]
-    m["snapshot_id"] = snap_id
-    m["current_snapshot_id"] = snap_id
-    m["bucket_rows"] = counts
-    m["total_rows"] = new_total
-    tmpf = os.path.join(path, MANIFEST + ".tmp")
-    with open(tmpf, "w") as f:
-        json.dump(m, f, indent=1)
-    os.replace(tmpf, os.path.join(path, MANIFEST))  # atomic commit
+
+    snap_id = _next_id(m)
+    new_files = _stage(
+        path,
+        src_df.repartition(n_buckets, "bucket"),
+        "_compact_tmp",
+        "compact",
+        snap_id,
+        check=parity,
+    )
+    snapshot = _commit(path, m, new_files, "compact", snap_id)
     return {
         "snapshot_id": snap_id,
         "files_before": len(cur["files"]),
         "files_after": len(new_files),
-        "rows": new_total,
+        "rows": snapshot["total_rows"],
     }
 
 
@@ -422,10 +432,8 @@ def expire_snapshots(
     pointing at deleted data."""
     if keep_last is None and older_than_ms is None:
         raise ValueError("give keep_last and/or older_than_ms")
-    m = read_manifest(path)
-    snaps = m.get("snapshots", [])
-    if not snaps:
-        raise ValueError("table has no snapshot history (pre-v2 manifest)")
+    m, _cur = _current(path)
+    snaps = m["snapshots"]
     retained = []
     for i, s in enumerate(snaps):
         keep = s["snapshot_id"] == m["current_snapshot_id"]
@@ -446,10 +454,7 @@ def expire_snapshots(
         - live
     )
     m["snapshots"] = retained
-    tmp = os.path.join(path, MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(m, f, indent=1)
-    os.replace(tmp, os.path.join(path, MANIFEST))  # atomic commit
+    _swap_manifest(path, m)
     import shutil
 
     for rel in dead:
@@ -482,9 +487,7 @@ def remove_orphan_files(path: str, grace_seconds: float = 3600.0) -> dict:
     can be active."""
     import shutil
 
-    m = read_manifest(path)
-    if not m.get("snapshots"):
-        raise ValueError("table has no snapshot history (pre-v2 manifest)")
+    m, _cur = _current(path)
     live = {f["path"] for s in m["snapshots"] for f in s["files"]} | {
         d["path"] for s in m["snapshots"] for d in s.get("delete_files", [])
     }
@@ -549,7 +552,7 @@ def write_cell_partitioned(
     keyed.write.mode(mode).partitionBy("p_cell").parquet(path)
     spark = df.sparkSession
     written = spark.read.parquet(path)
-    cell_rows = _footer_partition_counts(path, "p_cell")
+    cell_rows = _dir_rows(_data_files(path))
     manifest = {
         "format": "gregor-iceberg-like/1",
         "snapshot_id": int(time.time() * 1000),
@@ -568,22 +571,18 @@ def write_cell_partitioned(
         "cell_rows": cell_rows,
         "total_rows": sum(cell_rows.values()),
     }
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=1)
+    _swap_manifest(path, manifest)
     return manifest
 
 
-def _rect_cells(
-    minx: float, miny: float, maxx: float, maxy: float, res: int, bounds
-) -> list[int]:
+def _rect_cells(bbox, res: int, bounds) -> list[int]:
     """All cells at ``res`` whose tile intersects the rect (driver-side,
     O(tiles-in-rect); callers choose parent_res so this stays small)."""
     import numpy as np
 
     from ..geo import cells as C
 
-    ix0, iy0 = (int(v[0]) for v in C.xy_to_tile(np.array([minx]), np.array([miny]), res, bounds))
-    ix1, iy1 = (int(v[0]) for v in C.xy_to_tile(np.array([maxx]), np.array([maxy]), res, bounds))
+    ix0, iy0, ix1, iy1 = _tile_rect(bbox, res, bounds)
     out = []
     for iy in range(iy0, iy1 + 1):
         for ix in range(ix0, ix1 + 1):
@@ -610,7 +609,7 @@ def read_cell_partitioned(
     if bbox is None:
         return df
     minx, miny, maxx, maxy = bbox
-    cells = _rect_cells(minx, miny, maxx, maxy, spec["parent_res"], tuple(spec["bounds"]))
+    cells = _rect_cells(bbox, spec["parent_res"], tuple(spec["bounds"]))
     xc, yc = spec["x"], spec["y"]
     return df.filter(
         F.col("p_cell").isin(cells)
@@ -724,8 +723,7 @@ def zorder_table(
         "files": files,
         "total_rows": sum(f["rows"] for f in files),
     }
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=1)
+    _swap_manifest(path, manifest)
     return manifest
 
 
@@ -791,15 +789,7 @@ def _bbox_z_intervals(
 
     from ..geo import cells as C
 
-    minx, miny, maxx, maxy = bbox
-    ix0, iy0 = (
-        int(v[0])
-        for v in C.xy_to_tile(np.array([minx]), np.array([miny]), res, bounds)
-    )
-    ix1, iy1 = (
-        int(v[0])
-        for v in C.xy_to_tile(np.array([maxx]), np.array([maxy]), res, bounds)
-    )
+    ix0, iy0, ix1, iy1 = _tile_rect(bbox, res, bounds)
     res_tag = res << 56
 
     def _emit(px: int, py: int, level: int) -> tuple[int, int]:
@@ -932,77 +922,28 @@ def _uri_to_rel(uri: str, path: str) -> str:
 
 
 def _cow_commit(
-    spark: SparkSession,
     path: str,
     m: dict,
+    cur: dict,
     replaced: set[str],
     out: DataFrame,
     operation: str,
 ) -> dict:
-    """Copy-on-write commit shared by merge/delete: stage ``out``
-    (bucket column included) to a tmp dir invisible to readers, move
-    the files into the bucket dirs under snapshot-unique names, and
+    """Copy-on-write commit shared by merge/delete: stage ``out`` and
     atomically swap in a snapshot whose file list is (current −
     ``replaced``) + the staged files.  Replaced files stay on disk so
     older snapshots still time-travel file-for-file (expire_snapshots
     reclaims them) — the Iceberg COW contract."""
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    snaps = m["snapshots"]
-    cur = _resolve_snapshot(m, m["current_snapshot_id"], None)
-    tmp = os.path.join(path, "_cow_tmp")
-    out.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-    now_ms = int(time.time() * 1000)
-    snap_id = max(now_ms, snaps[-1]["snapshot_id"] + 1)
-    new_files: list[tuple[str, int]] = []
-    for dirname in sorted(os.listdir(tmp)):
-        if not dirname.startswith("bucket="):
-            continue
-        os.makedirs(os.path.join(path, dirname), exist_ok=True)
-        parts = sorted(
-            f for f in os.listdir(os.path.join(tmp, dirname)) if f.endswith(".parquet")
-        )
-        for i, fname in enumerate(parts):
-            rel = os.path.join(dirname, f"{operation}-{snap_id}-{i:05d}.parquet")
-            os.replace(os.path.join(tmp, dirname, fname), os.path.join(path, rel))
-            rows = pq.ParquetFile(os.path.join(path, rel)).metadata.num_rows
-            if rows == 0:  # empty task output — drop, keep the list tight
-                os.remove(os.path.join(path, rel))
-                continue
-            new_files.append((rel, rows))
-    shutil.rmtree(tmp)
-    files = [f for f in cur["files"] if f["path"] not in replaced] + [
-        {"path": p, "rows": n, "seq": snap_id} for p, n in new_files
-    ]
-    total = sum(f["rows"] for f in files)
-    snapshot = {
-        "snapshot_id": snap_id,
-        "timestamp_ms": now_ms,
-        "operation": operation,
-        "files": files,
-        "total_rows": total,
-    }
-    counts: dict[str, int] = {}
-    for f in files:
-        key = os.path.dirname(f["path"]).split("=", 1)[1]
-        counts[key] = counts.get(key, 0) + f["rows"]
-    m["snapshots"] = snaps + [snapshot]
-    m["snapshot_id"] = snap_id
-    m["current_snapshot_id"] = snap_id
-    m["bucket_rows"] = counts
-    m["total_rows"] = total
-    tmpf = os.path.join(path, MANIFEST + ".tmp")
-    with open(tmpf, "w") as f:
-        json.dump(m, f, indent=1)
-    os.replace(tmpf, os.path.join(path, MANIFEST))  # atomic commit
+    snap_id = _next_id(m)
+    new_files = _stage(path, out, "_cow_tmp", operation, snap_id)
+    files = [f for f in cur["files"] if f["path"] not in replaced] + new_files
+    snapshot = _commit(path, m, files, operation, snap_id)
     return {
         "snapshot_id": snap_id,
         "operation": operation,
         "files_rewritten": len(replaced),
         "files_added": len(new_files),
-        "total_rows": total,
+        "total_rows": snapshot["total_rows"],
     }
 
 
@@ -1022,10 +963,8 @@ def merge_table(
     anti-join that drops superseded rows both hash on the key — the
     same partial-agg shuffle class as every dedup op; unaffected files
     never enter any Spark plan."""
-    m = read_manifest(path)
-    if not m.get("snapshots"):
-        raise ValueError("table has no snapshot history (pre-v2 manifest)")
-    if _resolve_snapshot(m, m["current_snapshot_id"], None).get("delete_files"):
+    m, cur = _current(path)
+    if cur.get("delete_files"):
         raise ValueError(
             "table has merge-on-read delete files; run compact_table "
             "before a copy-on-write MERGE (a file-granular rewrite would "
@@ -1044,7 +983,6 @@ def merge_table(
     src = source.withColumn(
         "bucket", F.pmod(F.hash(F.col(key)), F.lit(spec["n_buckets"]))
     )
-    cur = _resolve_snapshot(m, m["current_snapshot_id"], None)
     cur_files = [os.path.join(path, f["path"]) for f in cur["files"]]
     tagged = (
         spark.read.option("basePath", path)
@@ -1077,7 +1015,7 @@ def merge_table(
     else:
         probe = spark.read.option("basePath", path).parquet(*cur_files).limit(0)
         out = src.select(*probe.columns)
-    summary = _cow_commit(spark, path, m, replaced, out, "merge")
+    summary = _cow_commit(path, m, cur, replaced, out, "merge")
     summary["rows_updated"] = n_updated
     summary["rows_inserted"] = n_src - n_matched_keys
     return summary
@@ -1089,12 +1027,9 @@ def delete_where(spark: SparkSession, path: str, condition) -> dict:
     matches; everything else is untouched.  NULL predicate results keep
     the row (ANSI DELETE removes only WHERE=true).  A no-match delete
     commits nothing and returns a no-op summary."""
-    m = read_manifest(path)
-    if not m.get("snapshots"):
-        raise ValueError("table has no snapshot history (pre-v2 manifest)")
+    m, cur = _current(path)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     hit = F.coalesce(cond, F.lit(False))
-    cur = _resolve_snapshot(m, m["current_snapshot_id"], None)
     if cur.get("delete_files"):
         raise ValueError(
             "table has merge-on-read delete files; run compact_table "
@@ -1124,7 +1059,7 @@ def delete_where(spark: SparkSession, path: str, condition) -> dict:
         *[os.path.join(path, r) for r in sorted(replaced)]
     )
     out = old_hit.where(~hit)
-    summary = _cow_commit(spark, path, m, replaced, out, "delete")
+    summary = _cow_commit(path, m, cur, replaced, out, "delete")
     summary["rows_deleted"] = cur["total_rows"] - summary["total_rows"]
     return summary
 
@@ -1132,37 +1067,50 @@ def delete_where(spark: SparkSession, path: str, condition) -> dict:
 # ------------------------------------------------ merge-on-read deletes
 
 
-def _mor_commit(path: str, m: dict, entry: dict, operation: str) -> dict:
-    """Commit a merge-on-read delete: a new snapshot with the SAME data
-    files and one more delete-file entry — no data file is touched (the
-    cheap-write/deferred-read half of the Iceberg v2 contract; COW is
-    the other half).  Atomic manifest swap as everywhere."""
-    snaps = m["snapshots"]
-    cur = _resolve_snapshot(m, m["current_snapshot_id"], None)
-    now_ms = int(time.time() * 1000)
-    snap_id = max(now_ms, snaps[-1]["snapshot_id"] + 1)
-    entry = dict(entry)
-    snapshot = {
-        "snapshot_id": snap_id,
-        "timestamp_ms": now_ms,
-        "operation": operation,
-        "files": [dict(f) for f in cur["files"]],
-        "total_rows": cur["total_rows"],
-        "delete_files": list(cur.get("delete_files", [])) + [entry],
-    }
-    m["snapshots"] = snaps + [snapshot]
-    m["snapshot_id"] = snap_id
-    m["current_snapshot_id"] = snap_id
-    tmpf = os.path.join(path, MANIFEST + ".tmp")
-    with open(tmpf, "w") as f:
-        json.dump(m, f, indent=1)
-    os.replace(tmpf, os.path.join(path, MANIFEST))  # atomic commit
+def _mor_delete(
+    path: str,
+    m: dict,
+    cur: dict,
+    rows: DataFrame,
+    kind: str,
+    operation: str,
+    col: str | None = None,
+) -> dict:
+    """Write ``rows`` as one delete file and commit a merge-on-read
+    snapshot: the SAME data files plus one more delete-file entry — no
+    data file is touched (the cheap-write/deferred-read half of the
+    Iceberg v2 contract; COW is the other half).  One snapshot id names
+    the file, scopes an equality delete (``applies_seq``) and is the
+    committed id.  The delete count comes from the file's footers; an
+    empty delete file is removed and nothing is committed."""
+    snap_id = _next_id(m)
+    prefix = "posdel" if kind == "position" else "eqdel"
+    rel = f"_deletes/{prefix}-{snap_id}"
+    rows.write.mode("errorifexists").parquet(os.path.join(path, rel))
+    n = sum(r for _f, r in _data_files(os.path.join(path, rel)))
+    dels = list(cur.get("delete_files", []))
+    if n == 0:
+        import shutil
+
+        shutil.rmtree(os.path.join(path, rel))
+        return {
+            "snapshot_id": m["current_snapshot_id"],
+            "operation": operation,
+            "delete_file": None,
+            "delete_rows": 0,
+            "delete_files_total": len(dels),
+        }
+    entry = {"path": rel, "rows": n, "kind": kind}
+    if kind == "equality":
+        entry.update(col=col, applies_seq=snap_id)
+    dels.append(entry)
+    _commit(path, m, [dict(f) for f in cur["files"]], operation, snap_id, dels)
     return {
         "snapshot_id": snap_id,
         "operation": operation,
-        "delete_file": entry["path"],
-        "delete_rows": entry["rows"],
-        "delete_files_total": len(snapshot["delete_files"]),
+        "delete_file": rel,
+        "delete_rows": n,
+        "delete_files_total": len(dels),
     }
 
 
@@ -1176,12 +1124,9 @@ def delete_where_mor(spark: SparkSession, path: str, condition) -> dict:
     trading read-side work until ``compact_table`` folds the deletes
     back into clean files.  NULL predicate results keep the row; a
     no-match delete commits nothing."""
-    m = read_manifest(path)
-    if not m.get("snapshots"):
-        raise ValueError("table has no snapshot history (pre-v2 manifest)")
+    m, cur = _current(path)
     cond = F.expr(condition) if isinstance(condition, str) else condition
     hit = F.coalesce(cond, F.lit(False))
-    cur = _resolve_snapshot(m, m["current_snapshot_id"], None)
     cur_files = [os.path.join(path, f["path"]) for f in cur["files"]]
     base = spark.read.option("basePath", path).parquet(*cur_files)
     # apply EXISTING deletes first so re-deleting an already-deleted row
@@ -1196,25 +1141,7 @@ def delete_where_mor(spark: SparkSession, path: str, condition) -> dict:
             F.col("_metadata.row_index").alias("pos"),
         )
     )
-    snaps = m["snapshots"]
-    snap_id = max(int(time.time() * 1000), snaps[-1]["snapshot_id"] + 1)
-    rel = f"_deletes/posdel-{snap_id}"
-    hits.write.mode("errorifexists").parquet(os.path.join(path, rel))
-    n = spark.read.parquet(os.path.join(path, rel)).count()
-    if n == 0:
-        import shutil
-
-        shutil.rmtree(os.path.join(path, rel))
-        return {
-            "snapshot_id": m["current_snapshot_id"],
-            "operation": "delete-mor",
-            "delete_file": None,
-            "delete_rows": 0,
-            "delete_files_total": len(cur.get("delete_files", [])),
-        }
-    return _mor_commit(
-        path, m, {"path": rel, "rows": n, "kind": "position"}, "delete-mor"
-    )
+    return _mor_delete(path, m, cur, hits, "position", "delete-mor")
 
 
 def delete_keys_mor(spark: SparkSession, path: str, keys: DataFrame, col: str) -> dict:
@@ -1226,36 +1153,6 @@ def delete_keys_mor(spark: SparkSession, path: str, keys: DataFrame, col: str) -
     all: cost is O(|keys|) regardless of table size — the GDPR/right-
     to-be-forgotten shape.  NULL keys are dropped (undeletable by
     equality)."""
-    m = read_manifest(path)
-    if not m.get("snapshots"):
-        raise ValueError("table has no snapshot history (pre-v2 manifest)")
-    cur = _resolve_snapshot(m, m["current_snapshot_id"], None)
-    snaps = m["snapshots"]
-    snap_id = max(int(time.time() * 1000), snaps[-1]["snapshot_id"] + 1)
-    rel = f"_deletes/eqdel-{snap_id}"
+    m, cur = _current(path)
     vals = keys.select(F.col(col)).where(F.col(col).isNotNull()).distinct()
-    vals.write.mode("errorifexists").parquet(os.path.join(path, rel))
-    n = spark.read.parquet(os.path.join(path, rel)).count()
-    if n == 0:
-        import shutil
-
-        shutil.rmtree(os.path.join(path, rel))
-        return {
-            "snapshot_id": m["current_snapshot_id"],
-            "operation": "delete-mor-eq",
-            "delete_file": None,
-            "delete_rows": 0,
-            "delete_files_total": len(cur.get("delete_files", [])),
-        }
-    return _mor_commit(
-        path,
-        m,
-        {
-            "path": rel,
-            "rows": n,
-            "kind": "equality",
-            "col": col,
-            "applies_seq": snap_id,
-        },
-        "delete-mor-eq",
-    )
+    return _mor_delete(path, m, cur, vals, "equality", "delete-mor-eq", col=col)

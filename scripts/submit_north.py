@@ -61,7 +61,7 @@ def main() -> None:
     assigned = run.run_stage(
         "assign",
         lambda: spatial_hash_join(
-            pts.drop("_part"),
+            pts,
             zones,
             args.res,
             bounds,
