@@ -16,10 +16,14 @@ hard-part (d)).  The paths differ only in where the candidates come from:
 * **partitioned**: the grouped cover becomes one row per cell
   (``cell_id``, ``_z`` zone ids, ``_f`` flags) and joins the facts on
   ``cell_id``, so every fact meets its candidates in exactly one row and
-  needs no dedup.  With **explicit salting** (north rule) a pre-aggregated
-  cell histogram finds hot cells; fact rows there get ``salt =
-  pmod(hash(fact key), k)`` and the hot cover rows explode ×k.  AQE skew
-  handling stays on as a second line of defense.
+  needs no dedup.  **Explicit salting** (north rule) applies only when
+  that join shuffles the facts, i.e. when the cover is above Spark's
+  broadcast threshold (or its size is unknown): a pre-aggregated cell
+  histogram finds hot cells, fact rows there get ``salt =
+  pmod(hash(fact key), k)`` and the hot cover rows explode ×k.  A cover
+  that fits is broadcast instead (the facts stay put, so there is no
+  skew to spread) — admin-sized layers are replicated, not partitioned.
+  AQE skew handling stays on as a second line of defense.
 """
 
 from __future__ import annotations
@@ -290,10 +294,13 @@ def spatial_hash_join(
 
     ``broadcast_cover=None`` lets the planner decide (plans/strategy.py);
     ``salt_threshold`` enables explicit hot-cell salting on the
-    partitioned path.  ``fact_key`` (a stable id column) feeds the salt
-    hash so salting is deterministic run-to-run.
+    partitioned path when its join shuffles the facts (a cover above
+    ``spark.sql.autoBroadcastJoinThreshold``, or of unknown size); a
+    cover that fits joins as a broadcast with no salt.  ``fact_key`` (a
+    stable id column) feeds the salt hash so salting is deterministic
+    run-to-run.
     """
-    from ..plans.strategy import choose_broadcast
+    from ..plans.strategy import broadcasts, choose_broadcast
 
     cover_pairs = zones.cover(res, bounds)
     if broadcast_cover is None:
@@ -301,11 +308,6 @@ def spatial_hash_join(
     keyed = with_cell_id(facts, res, bounds, x=x, y=y)
     fact_cols = keyed.columns
     how = "left" if keep_unassigned else "inner"
-    # NB: the skew histogram makes `keyed` dual-consumed, but it is NOT
-    # persisted: the encode is pure codegen, so recomputing the scan
-    # lineage costs seconds while a deserialized MEMORY_AND_DISK persist
-    # of the fact table causes an allocation/GC storm that anti-scales
-    # with task threads (measured: 85 s at local[32] vs 4 s recompute).
 
     if broadcast_cover:
         zid = zone_id_col(zones, cover_pairs, F.col(x), F.col(y), F.col("cell_id"), rule)
@@ -316,7 +318,19 @@ def spatial_hash_join(
     # one cover row per cell (per (cell, salt) when salted): the join gives
     # exactly one row per fact, so claims resolve with no dedup
     cover = _cover_df(facts.sparkSession, cover_pairs)
-    if salt_threshold is not None:
+    if salt_threshold is None:
+        joined = keyed.join(cover, "cell_id", how)
+    elif broadcasts(cover):
+        # the same size check as JoinSelection's, pinned by the hint: the
+        # facts never shuffle, so salting would spread no skew and its
+        # histogram and hot broadcasts would be pure overhead
+        joined = keyed.join(F.broadcast(cover), "cell_id", how)
+    else:
+        # NB: the skew histogram makes `keyed` dual-consumed, but it is NOT
+        # persisted: the encode is pure codegen, so recomputing the scan
+        # lineage costs seconds while a deserialized MEMORY_AND_DISK persist
+        # of the fact table causes an allocation/GC storm that anti-scales
+        # with task threads (measured: 85 s at local[32] vs 4 s recompute).
         hot = hot_cells(keyed, salt_threshold).drop("_n")
         salt_src = F.col(fact_key) if fact_key else F.monotonically_increasing_id()
         facts_salted = (
@@ -340,8 +354,6 @@ def spatial_hash_join(
         )
         cover_salted = hot_cover.unionByName(cold_cover)
         joined = facts_salted.join(cover_salted, ["cell_id", "_salt"], how).drop("_salt")
-    else:
-        joined = keyed.join(cover, "cell_id", how)
 
     zid = _candidates_col(zones, F.col(x), F.col(y), rule)
     assigned = joined.select(*fact_cols, zid.alias("zone_id"))

@@ -22,31 +22,51 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MANIFEST = "_gregor_manifest.json"
 
 
-def _data_files(root: str) -> list[tuple[str, int]]:
-    """(path relative to ``root``, footer row count) for every non-empty
-    parquet data file under a written dir, in sorted walk order — the
-    unit an Iceberg manifest tracks.  Footers only: zero Spark jobs and
-    no data pages read (a footer is a few KB regardless of file size),
-    which is what a real Iceberg writer records at commit time instead
-    of re-scanning what it just wrote.  Spark-hidden ``_``/``.`` entries
-    (``_SUCCESS``, staging and delete dirs) are skipped, and so are
-    zero-row files (an empty write still leaves one ``part-00000``)."""
-    import pyarrow.parquet as pq
-
-    files: list[tuple[str, int]] = []
+def _parquet_paths(root: str):
+    """Paths relative to ``root`` of the parquet data files under it, in
+    sorted walk order.  Spark-hidden ``_``/``.`` entries (``_SUCCESS``,
+    staging and delete dirs) are skipped."""
     for dirpath, dirnames, fnames in os.walk(root):
         dirnames[:] = sorted(d for d in dirnames if not d.startswith(("_", ".")))
         for fname in sorted(fnames):
             if fname.endswith(".parquet") and not fname.startswith(("_", ".")):
-                full = os.path.join(dirpath, fname)
-                n = pq.ParquetFile(full).metadata.num_rows
-                if n:
-                    files.append((os.path.relpath(full, root), n))
+                yield os.path.relpath(os.path.join(dirpath, fname), root)
+
+
+def _data_files(root: str, skip=frozenset()) -> list[tuple[str, int]]:
+    """(path relative to ``root``, footer row count) for every non-empty
+    parquet data file under a written dir not named in ``skip`` — the
+    unit an Iceberg manifest tracks.  Footers only: zero Spark jobs and
+    no data pages read (a footer is a few KB regardless of file size),
+    which is what a real Iceberg writer records at commit time instead
+    of re-scanning what it just wrote.  Zero-row files are skipped (an
+    empty write still leaves one ``part-00000``)."""
+    import pyarrow.parquet as pq
+
+    files: list[tuple[str, int]] = []
+    for rel in _parquet_paths(root):
+        if rel not in skip:
+            n = pq.ParquetFile(os.path.join(root, rel)).metadata.num_rows
+            if n:
+                files.append((rel, n))
     return files
+
+
+def _scan(spark: SparkSession, path: str, m: dict, files: list[str]) -> DataFrame:
+    """The data ``files`` (full paths) of table ``path`` as one frame with
+    the derived ``bucket`` column.  The manifest's ``schema`` is handed to
+    the reader, so no schema-inference job runs; a manifest without one
+    falls back to inference."""
+    reader = spark.read.option("basePath", path)
+    if m.get("schema"):
+        schema = T.StructType.fromJson(m["schema"])
+        reader = reader.schema(T.StructType([f for f in schema if f.name != "bucket"]))
+    return reader.parquet(*files)
 
 
 def _dir_rows(files) -> dict[str, int]:
@@ -164,8 +184,11 @@ def write_table(
     overwrite followed by ``expire_snapshots``."""
     out = df.withColumn("bucket", F.pmod(F.hash(F.col(bucket_by)), F.lit(n_buckets)))
     prior = []
-    if mode == "append" and os.path.exists(os.path.join(path, MANIFEST)):
-        prior = read_manifest(path).get("snapshots", [])
+    before = set()
+    if mode == "append":
+        if os.path.exists(os.path.join(path, MANIFEST)):
+            prior = read_manifest(path).get("snapshots", [])
+        before = set(_parquet_paths(path))
     # Iceberg write.distribution-mode=hash (r8, guide §6): cluster rows
     # by bucket before the partitioned write so each bucket lands in ONE
     # file per commit instead of one per upstream task.  A 64-partition
@@ -183,20 +206,16 @@ def write_table(
         "snapshots": prior,
     }
     snap_id = _next_id(manifest)
-    # an appending commit = the current snapshot's files plus whatever
-    # the write just added — NOT a blind directory walk, which would
+    # an appending commit = the current snapshot's files plus the files
+    # this write created — NOT a blind directory walk, which would
     # resurrect files kept on disk only for older snapshots' time
-    # travel (e.g. pre-compaction small files awaiting expiry).
+    # travel (e.g. pre-compaction small files awaiting expiry) and
+    # commit an aborted write's leftover part files.
     # Inherited entries keep their data sequence number ("seq" —
     # missing on pre-r7 entries means 0); new files stamp this
     # commit's, so merge-on-read equality deletes scope correctly.
-    known = {f["path"] for s in prior for f in s["files"]}
     files = [dict(f) for f in prior[-1]["files"]] if prior else []
-    files += [
-        {"path": p, "rows": n, "seq": snap_id}
-        for p, n in _data_files(path)
-        if p not in known
-    ]
+    files += [{"path": p, "rows": n, "seq": snap_id} for p, n in _data_files(path, before)]
     # merge-on-read deletes keep applying to the files they were
     # committed against; an append inherits them untouched
     dels = prior[-1].get("delete_files", ()) if prior else ()
@@ -245,7 +264,7 @@ def read_table(
     files = [os.path.join(path, f["path"]) for f in snap["files"]]
     if not files:
         raise ValueError(f"snapshot {snap['snapshot_id']} lists no files")
-    df = spark.read.option("basePath", path).parquet(*files)
+    df = _scan(spark, path, m, files)
     if snap.get("delete_files"):
         df = _apply_mor_deletes(spark, path, snap, df)
     return df
@@ -342,7 +361,7 @@ def read_table_changes(
     ]
     if not new_files:
         return spark.read.parquet(path).limit(0)
-    return spark.read.option("basePath", path).parquet(*new_files)
+    return _scan(spark, path, m, new_files)
 
 
 def read_manifest(path: str) -> dict:
@@ -372,7 +391,7 @@ def compact_table(spark: SparkSession, path: str) -> dict:
     m, cur = _current(path)
     n_buckets = m["partition_spec"]["n_buckets"]
     src = [os.path.join(path, f["path"]) for f in cur["files"]]
-    src_df = spark.read.option("basePath", path).parquet(*src)
+    src_df = _scan(spark, path, m, src)
     has_dels = bool(cur.get("delete_files"))
     if has_dels:
         # compaction FOLDS merge-on-read deletes: the rewrite reads
@@ -478,7 +497,7 @@ def remove_orphan_files(path: str, grace_seconds: float = 3600.0) -> dict:
     ``compact_table`` and ``expire_snapshots``.  Orphans come from
     crashes between a data write and its manifest swap (an aborted
     compaction's moved files, a failed append's part files) and from
-    leftover ``_compact_tmp`` staging dirs.
+    leftover ``_compact_tmp``/``_cow_tmp`` staging dirs.
 
     ``grace_seconds`` skips files younger than the threshold — a
     concurrent writer's files are unreferenced until its commit, so
@@ -495,7 +514,7 @@ def remove_orphan_files(path: str, grace_seconds: float = 3600.0) -> dict:
     deleted: list[str] = []
     for dirname in sorted(os.listdir(path)):
         pdir = os.path.join(path, dirname)
-        if dirname == "_compact_tmp" and os.path.isdir(pdir):
+        if dirname in ("_compact_tmp", "_cow_tmp") and os.path.isdir(pdir):
             if os.path.getmtime(pdir) <= cutoff:
                 shutil.rmtree(pdir)
                 deleted.append(dirname + "/")
@@ -984,11 +1003,7 @@ def merge_table(
         "bucket", F.pmod(F.hash(F.col(key)), F.lit(spec["n_buckets"]))
     )
     cur_files = [os.path.join(path, f["path"]) for f in cur["files"]]
-    tagged = (
-        spark.read.option("basePath", path)
-        .parquet(*cur_files)
-        .withColumn("_file", F.input_file_name())
-    )
+    tagged = _scan(spark, path, m, cur_files).withColumn("_file", F.input_file_name())
     hit_uris = [
         r["_file"]
         for r in tagged.join(src.select(key), key, "left_semi")
@@ -1000,9 +1015,7 @@ def merge_table(
     n_updated = 0
     n_matched_keys = 0
     if hit_uris:
-        old_hit = spark.read.option("basePath", path).parquet(
-            *[os.path.join(path, r) for r in sorted(replaced)]
-        )
+        old_hit = _scan(spark, path, m, [os.path.join(path, r) for r in sorted(replaced)])
         n_updated = old_hit.join(src.select(key), key, "left_semi").count()
         # matched SOURCE keys, not matched old rows: if the existing
         # table holds duplicate rows per key, old-row counts overshoot
@@ -1013,7 +1026,7 @@ def merge_table(
         kept_old = old_hit.join(src.select(key), key, "left_anti")
         out = kept_old.unionByName(src.select(*kept_old.columns))
     else:
-        probe = spark.read.option("basePath", path).parquet(*cur_files).limit(0)
+        probe = _scan(spark, path, m, cur_files).limit(0)
         out = src.select(*probe.columns)
     summary = _cow_commit(path, m, cur, replaced, out, "merge")
     summary["rows_updated"] = n_updated
@@ -1037,11 +1050,7 @@ def delete_where(spark: SparkSession, path: str, condition) -> dict:
             "would resurrect MoR-deleted rows) — or use delete_where_mor"
         )
     cur_files = [os.path.join(path, f["path"]) for f in cur["files"]]
-    tagged = (
-        spark.read.option("basePath", path)
-        .parquet(*cur_files)
-        .withColumn("_file", F.input_file_name())
-    )
+    tagged = _scan(spark, path, m, cur_files).withColumn("_file", F.input_file_name())
     hit_uris = [
         r["_file"] for r in tagged.where(hit).select("_file").distinct().collect()
     ]
@@ -1055,9 +1064,7 @@ def delete_where(spark: SparkSession, path: str, condition) -> dict:
             "total_rows": cur["total_rows"],
         }
     replaced = {_uri_to_rel(u, path) for u in hit_uris}
-    old_hit = spark.read.option("basePath", path).parquet(
-        *[os.path.join(path, r) for r in sorted(replaced)]
-    )
+    old_hit = _scan(spark, path, m, [os.path.join(path, r) for r in sorted(replaced)])
     out = old_hit.where(~hit)
     summary = _cow_commit(path, m, cur, replaced, out, "delete")
     summary["rows_deleted"] = cur["total_rows"] - summary["total_rows"]
@@ -1128,7 +1135,7 @@ def delete_where_mor(spark: SparkSession, path: str, condition) -> dict:
     cond = F.expr(condition) if isinstance(condition, str) else condition
     hit = F.coalesce(cond, F.lit(False))
     cur_files = [os.path.join(path, f["path"]) for f in cur["files"]]
-    base = spark.read.option("basePath", path).parquet(*cur_files)
+    base = _scan(spark, path, m, cur_files)
     # apply EXISTING deletes first so re-deleting an already-deleted row
     # cannot double-record a position
     if cur.get("delete_files"):

@@ -69,22 +69,29 @@ def main() -> None:
             ),
         )
     )
+    # salting applies only to a join that shuffles: plan it as for a cover
+    # above the broadcast threshold
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    salted = formatted(
+        spatial_hash_join(
+            cells, ZoneSet.from_fixture(FX.SEG_2X2), 6, bounds,
+            broadcast_cover=False, salt_threshold=0, salt_factor=4,
+            keep_unassigned=True, fact_key="row",
+        )
+    )
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     sections.append(
         (
             "Partitioned spatial join with explicit hot-cell salting",
-            "The shuffle path for un-broadcastable covers: explicit "
-            "histogram (partial-agg), fact-side pmod(hash, k) salt, hot "
-            "cover rows (one per cell, candidate zones as arrays) exploded "
-            "×k, then ONE join that meets each fact's candidates in one "
-            "row and a slim resolver UDF over (x, y, _z, _f) only — no "
-            "groupBy.",
-            formatted(
-                spatial_hash_join(
-                    cells, ZoneSet.from_fixture(FX.SEG_2X2), 6, bounds,
-                    broadcast_cover=False, salt_threshold=0, salt_factor=4,
-                    keep_unassigned=True, fact_key="row",
-                )
-            ),
+            "The shuffle path for covers that cannot broadcast (planned "
+            "with spark.sql.autoBroadcastJoinThreshold=-1; a salted request "
+            "whose cover fits the threshold joins it as a broadcast with "
+            "no salt, since the facts never shuffle): explicit histogram "
+            "(partial-agg), fact-side pmod(hash, k) salt, hot cover rows "
+            "(one per cell, candidate zones as arrays) exploded ×k, then "
+            "ONE join that meets each fact's candidates in one row and a "
+            "slim resolver UDF over (x, y, _z, _f) only — no groupBy.",
+            salted,
         )
     )
     sections.append(

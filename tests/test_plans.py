@@ -6,6 +6,7 @@ must hold, not just be hoped for (task brief: `.explain` and iterate).
 * norm/zone joins in disaggregation go broadcast (no fact shuffle);
 * the broadcast assignment path contains NO Exchange at all (map-only);
 * the partitioned assignment path contains no aggregate;
+* a salted join salts only when its cover cannot broadcast;
 * Morton encode runs inside WholeStageCodegen (no BatchEvalPython).
 """
 
@@ -87,6 +88,51 @@ def test_partitioned_assignment_has_no_aggregate(spark, parquet_cells):
     )
     plan = _formatted(assigned)
     assert "HashAggregate" not in plan, plan
+
+def test_salted_request_on_broadcastable_cover_is_a_broadcast_join(spark, parquet_cells):
+    """A cover under the broadcast threshold joins as a broadcast: the
+    facts never shuffle, so no hot-cell histogram and no salt."""
+    zones = ZoneSet.from_fixture(FX.SEG_2X2)
+    assigned = spatial_hash_join(
+        parquet_cells, zones, 6, BOUNDS, broadcast_cover=False, salt_threshold=0,
+        salt_factor=4, keep_unassigned=True, fact_key="row",
+    )
+    plan = _formatted(assigned)
+    assert "BroadcastHashJoin" in plan, plan
+    assert "HashAggregate" not in plan, plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    assert "Generate" not in plan, plan
+
+
+def test_salted_join_salts_when_the_cover_cannot_broadcast(spark, parquet_cells, monkeypatch):
+    """With broadcasts by size off (threshold -1), or a cover of unknown
+    size, the salted request plans the histogram and explodes the hot
+    cover rows; its rows equal the broadcast path's."""
+    from gregor_spark.plans import stats
+    from tests.helpers import no_auto_broadcast
+
+    zones = ZoneSet.from_fixture(FX.SEG_2X2)
+
+    def salted():
+        return spatial_hash_join(
+            parquet_cells, zones, 6, BOUNDS, broadcast_cover=False, salt_threshold=0,
+            salt_factor=4, keep_unassigned=True, fact_key="row",
+        )
+
+    def rows(df):
+        return sorted(df.select("row", "col", "zone_id").collect())
+
+    want = rows(spatial_hash_join(parquet_cells, zones, 6, BOUNDS, broadcast_cover=True,
+                                  keep_unassigned=True))
+    with no_auto_broadcast(spark):
+        assigned = salted()
+        plan = _formatted(assigned)
+        assert "Generate" in plan and "explode" in plan, plan
+        assert "HashAggregate" in plan, plan
+        assert rows(assigned) == want
+    monkeypatch.setattr(stats, "plan_size_bytes", lambda df: None)
+    assert "Generate" in _formatted(salted())
+
 
 def test_morton_encode_is_codegen(spark, parquet_cells):
     plan = _formatted(with_cell_id(parquet_cells, 8, BOUNDS))

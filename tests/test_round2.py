@@ -8,6 +8,8 @@ from pyspark.sql import functions as F
 from gregor_spark.model import fixtures as FX
 from gregor_spark.model.zones import ZoneSet
 
+from tests.helpers import no_auto_broadcast
+
 BOUNDS = (-0.25, 9.75, 1.75, 11.75)
 
 
@@ -66,12 +68,14 @@ def test_north_pipeline_span_sequence_invariant(spark):
     # itself AFTER the pipeline has consumed it (no mutation, stable order)
     from gregor_spark.operators.tiles import assign_tiles
 
-    tiled = assign_tiles(
-        corpus, 6, BOUNDS, zones=ZoneSet.from_fixture(FX.SEG_2X2),
-        keep_unassigned=True, broadcast_cover=False, salt_threshold=0,
-        salt_factor=4,
-    )
-    assert tiled.count() > 0
+    # no broadcast by size: the salted request then really salts
+    with no_auto_broadcast(spark):
+        tiled = assign_tiles(
+            corpus, 6, BOUNDS, zones=ZoneSet.from_fixture(FX.SEG_2X2),
+            keep_unassigned=True, broadcast_cover=False, salt_threshold=0,
+            salt_factor=4,
+        )
+        assert tiled.count() > 0
     assert verify_span_sequence(corpus, north_corpus(spark, "/root/testdata/sf0.001")) == 0
     # interleaving is real: every doc carries text+geo+media kinds
     kinds = (
@@ -107,7 +111,8 @@ def test_holed_zone_through_both_join_paths(spark):
 
     a = run(broadcast_cover=True)
     b = run(broadcast_cover=False)
-    c = run(broadcast_cover=False, salt_threshold=0, salt_factor=4)
+    with no_auto_broadcast(spark):  # a salted join salts only when it shuffles
+        c = run(broadcast_cover=False, salt_threshold=0, salt_factor=4)
     assert a == b == c
     # and the hole really is a hole: some points unassigned inside it
     inside_hole = [

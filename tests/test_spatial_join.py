@@ -2,6 +2,8 @@
 with each other and with the direct broadcast kernel assignment, at any
 parallelism (determinism, SURVEY.md §7 hard-part (d))."""
 
+from contextlib import nullcontext
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,6 +13,8 @@ from gregor_spark.operators.assign import assign_cells_df
 from gregor_spark.operators.spatial_join import spatial_hash_join, with_cell_id
 from gregor_spark.sources.documents import generate_documents, verify_span_sequence
 from gregor_spark.operators.tiles import assign_tiles, extract_geo_points, tile_histogram
+
+from tests.helpers import no_auto_broadcast
 
 BOUNDS = (-0.25, 9.75, 1.75, 11.75)
 RES = 6
@@ -44,12 +48,14 @@ def test_paths_agree(spark, pts):
     partitioned = _as_map(
         spatial_hash_join(pts, zones, RES, BOUNDS, broadcast_cover=False)
     )
-    salted = _as_map(
-        spatial_hash_join(
-            pts, zones, RES, BOUNDS, broadcast_cover=False, salt_threshold=10,
-            salt_factor=4, fact_key="point_id",
+    # no broadcast by size, or the salted request joins a broadcast cover
+    with no_auto_broadcast(spark):
+        salted = _as_map(
+            spatial_hash_join(
+                pts, zones, RES, BOUNDS, broadcast_cover=False, salt_threshold=10,
+                salt_factor=4, fact_key="point_id",
+            )
         )
-    )
     assert broadcast == partitioned == salted
     # and the join agrees with the cover-free assign_cells_df path
     direct = assign_cells_df(pts, zones, keep_unassigned=False)
@@ -116,15 +122,16 @@ def test_skew_salting_spreads_hot_cell(spark):
     docs = generate_documents(spark, 3000, BOUNDS, seed=1, skew=0.9, hot_frac=0.02)
     pts = extract_geo_points(docs)
     a = spatial_hash_join(pts, zones, RES, BOUNDS, x="lon", y="lat", broadcast_cover=True)
-    b = spatial_hash_join(
-        pts, zones, RES, BOUNDS, x="lon", y="lat", broadcast_cover=False,
-        salt_threshold=100, salt_factor=8, fact_key="doc_id",
-    )
     key = lambda df: {
         (r["doc_id"], r["offset"]): r["zone_id"]
         for r in df.select("doc_id", "offset", "zone_id").collect()
     }
-    assert key(a) == key(b)
+    with no_auto_broadcast(spark):  # the salted join must shuffle to salt
+        b = spatial_hash_join(
+            pts, zones, RES, BOUNDS, x="lon", y="lat", broadcast_cover=False,
+            salt_threshold=100, salt_factor=8, fact_key="doc_id",
+        )
+        assert key(a) == key(b)
 
 
 def test_jvm_cell_id_matches_numpy(spark, pts):
@@ -223,8 +230,10 @@ def test_paths_agree_on_adversarial_facts(spark, path, layer):
     expected = Counter(
         (i, None if z < 0 else int(z)) for (i, _x, _y), z in zip(rows, want)
     )
-    got = Counter(
-        (r["id"], r["zone_id"])
-        for r in _run_path(path, facts, zones).select("id", "zone_id").collect()
-    )
+    # the salted case salts only a join that shuffles
+    with no_auto_broadcast(spark) if path == "salted" else nullcontext():
+        got = Counter(
+            (r["id"], r["zone_id"])
+            for r in _run_path(path, facts, zones).select("id", "zone_id").collect()
+        )
     assert got == expected

@@ -1,0 +1,117 @@
+"""The iceberg-like table reader and its commit paths
+(sources/iceberg_like.py): the manifest's schema drives the scan, every
+commit keeps that schema equal to the data it commits, and only the
+files a write created are committed."""
+
+import json
+import os
+
+from pyspark.sql import functions as F
+
+from gregor_spark.sources.iceberg_like import (
+    MANIFEST,
+    compact_table,
+    delete_keys_mor,
+    delete_where,
+    delete_where_mor,
+    merge_table,
+    read_manifest,
+    read_table,
+    remove_orphan_files,
+    write_table,
+)
+
+
+def _last_job(spark) -> int:
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def _inferred(spark, path):
+    """The committed files' schema as parquet inference reads it."""
+    m = read_manifest(path)
+    cur = next(s for s in m["snapshots"] if s["snapshot_id"] == m["current_snapshot_id"])
+    files = [os.path.join(path, f["path"]) for f in cur["files"]]
+    return spark.read.option("basePath", path).parquet(*files).schema
+
+
+def _table(spark, path, n=20):
+    df = spark.range(n).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 10).alias("v"),
+        F.concat(F.lit("u"), F.col("id") % 7).alias("tag"),
+    )
+    write_table(df, path, bucket_by="k", n_buckets=4)
+
+
+def test_read_table_runs_no_job(spark, tmp_path):
+    """Building the read frame takes its schema from the manifest: no
+    schema-inference job, and the schema (bucket type included) is the
+    one inference gives.  A manifest without a schema still reads."""
+    path = str(tmp_path / "t")
+    _table(spark, path)
+    before = _last_job(spark)
+    df = read_table(spark, path)
+    assert _last_job(spark) == before
+    assert df.schema == _inferred(spark, path)
+    assert dict(df.dtypes)["bucket"] == "int"
+    m = read_manifest(path)
+    del m["schema"]
+    with open(os.path.join(path, MANIFEST), "w") as f:
+        json.dump(m, f)
+    assert read_table(spark, path).schema == df.schema
+    assert read_table(spark, path).count() == 20
+
+
+def test_every_commit_keeps_schema_equal_to_data(spark, tmp_path):
+    """Append, copy-on-write merge and delete, merge-on-read deletes and
+    compaction each leave the manifest schema equal to what the
+    committed files hold."""
+    path = str(tmp_path / "t")
+    _table(spark, path)
+    more = spark.range(20, 25).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v"), F.lit("a").alias("tag")
+    )
+    src = spark.createDataFrame([(3, 7, "m"), (99, 1, "n")], "k long, v long, tag string")
+    steps = [
+        lambda: write_table(more, path, bucket_by="k", n_buckets=4, mode="append"),
+        lambda: merge_table(spark, path, src, "k"),
+        lambda: delete_where(spark, path, "k = 4"),
+        lambda: delete_where_mor(spark, path, "k = 5"),
+        lambda: delete_keys_mor(spark, path, spark.range(6, 7).select(F.col("id").alias("k")), "k"),
+        lambda: compact_table(spark, path),
+    ]
+    for step in steps:
+        step()
+        assert read_table(spark, path).schema == _inferred(spark, path)
+    got = {r["k"]: r["v"] for r in read_table(spark, path).collect()}
+    assert got[3] == 7 and got[99] == 1
+    assert not {4, 5, 6} & set(got)
+    assert len(got) == 25 - 3 + 1
+
+
+def test_append_commits_only_the_files_it_wrote(spark, tmp_path):
+    """A stray part file left by an aborted write is not committed by a
+    later append."""
+    path = str(tmp_path / "t")
+    write_table(spark.range(20).selectExpr("id AS k", "id AS v"), path, bucket_by="k",
+                n_buckets=2)
+    spark.range(3).selectExpr("id AS k", "id AS v").toPandas().to_parquet(
+        os.path.join(path, "bucket=0", "part-aborted.parquet"))
+    m = write_table(spark.range(20, 25).selectExpr("id AS k", "id AS v"), path,
+                    bucket_by="k", n_buckets=2, mode="append")
+    assert m["total_rows"] == 25
+    assert read_table(spark, path).count() == 25
+
+
+def test_orphan_removal_reclaims_aged_cow_staging(spark, tmp_path):
+    """A copy-on-write staging dir left by a dead commit is reclaimed once
+    aged; a fresh one (a commit possibly in flight) is kept."""
+    path = str(tmp_path / "t")
+    _table(spark, path)
+    staging = os.path.join(path, "_cow_tmp", "bucket=0")
+    os.makedirs(staging)
+    assert remove_orphan_files(path, grace_seconds=3600)["deleted"] == []
+    assert os.path.isdir(staging)
+    assert "_cow_tmp/" in remove_orphan_files(path, grace_seconds=0)["deleted"]
+    assert not os.path.exists(os.path.join(path, "_cow_tmp"))
+    assert read_table(spark, path).count() == 20
