@@ -4,6 +4,7 @@ tiling engine (see README.md / COVERAGE.md for the full map).
 Public API: a reference user switches by importing these.
 """
 
+from ._pyworker import install as _install_pyworker_guard
 from .model.raster import (
     RasterMeta,
     clip_bbox,
@@ -37,6 +38,8 @@ from .operators.tiles import (
     tile_histogram,
 )
 from .session import get_spark
+
+_install_pyworker_guard()
 
 __all__ = [
     "RasterMeta",

@@ -58,10 +58,11 @@ def _data_files(root: str, skip=frozenset()) -> list[tuple[str, int]]:
 
 
 def _scan(spark: SparkSession, path: str, m: dict, files: list[str]) -> DataFrame:
-    """The data ``files`` (full paths) of table ``path`` as one frame with
-    the derived ``bucket`` column.  The manifest's ``schema`` is handed to
-    the reader, so no schema-inference job runs; a manifest without one
-    falls back to inference."""
+    """The data ``files`` (full paths, or the table dir itself) of table
+    ``path`` as one frame, partition columns (``bucket``, ``p_cell``)
+    derived from the directory names.  The manifest's ``schema`` is
+    handed to the reader, so no schema-inference job runs; a manifest
+    without one falls back to inference."""
     reader = spark.read.option("basePath", path)
     if m.get("schema"):
         schema = T.StructType.fromJson(m["schema"])
@@ -274,6 +275,9 @@ def read_table(
 #: hidden _metadata column (bucket layout is always bucket=N/<file>)
 _REL_FILE = r"bucket=\d+/[^/]+$"
 
+#: the fixed schema of a position delete file
+_POS_DELETE = "file_path string, pos long"
+
 
 def _apply_mor_deletes(spark, path: str, snap: dict, df: DataFrame) -> DataFrame:
     """Merge-on-read: anti-join the snapshot's delete files onto the
@@ -288,6 +292,9 @@ def _apply_mor_deletes(spark, path: str, snap: dict, df: DataFrame) -> DataFrame
       match (SQL join semantics), i.e. a NULL-keyed row is undeletable
       by equality — same as Iceberg.
 
+    Delete files are read with known schemas (the fixed position
+    schema; the key's type from the table schema), so no inference job
+    runs.
     Shape: one map-side projection of the hidden metadata, one anti-join
     per delete kind.  Delete frames are typically tiny next to the data
     and broadcast; the equality path's non-equi seq guard rides on the
@@ -299,15 +306,9 @@ def _apply_mor_deletes(spark, path: str, snap: dict, df: DataFrame) -> DataFrame
         "_file", F.regexp_extract(F.col("_metadata.file_path"), _REL_FILE, 0)
     ).withColumn("_pos", F.col("_metadata.row_index"))
     if pos:
-        pframes = [
-            spark.read.parquet(os.path.join(path, d["path"])) for d in pos
-        ]
-        pdel = pframes[0]
-        for fr in pframes[1:]:
-            pdel = pdel.unionByName(fr)
-        pdel = pdel.select(
-            F.col("file_path").alias("_df"), F.col("pos").alias("_dp")
-        )
+        pdel = spark.read.schema(_POS_DELETE).parquet(
+            *[os.path.join(path, d["path"]) for d in pos]
+        ).select(F.col("file_path").alias("_df"), F.col("pos").alias("_dp"))
         data = data.join(
             F.broadcast(pdel),
             (data["_file"] == pdel["_df"]) & (data["_pos"] == pdel["_dp"]),
@@ -323,8 +324,9 @@ def _apply_mor_deletes(spark, path: str, snap: dict, df: DataFrame) -> DataFrame
         for d in eq:
             by_col.setdefault(d["col"], []).append(d)
         for col, group in by_col.items():
+            key = T.StructType([df.schema[col]])
             frames = [
-                spark.read.parquet(os.path.join(path, d["path"]))
+                spark.read.schema(key).parquet(os.path.join(path, d["path"]))
                 .select(F.col(col).alias("_dk"))
                 .withColumn("_dseq", F.lit(int(d["applies_seq"])))
                 for d in group
@@ -624,7 +626,7 @@ def read_cell_partitioned(
     the scan as a PartitionFilter (asserted in tests/test_plans.py)."""
     m = read_manifest(path)
     spec = m["partition_spec"]
-    df = spark.read.parquet(path)
+    df = _scan(spark, path, m, [path])
     if bbox is None:
         return df
     minx, miny, maxx, maxy = bbox
@@ -873,7 +875,7 @@ def read_zordered(
     asserted in tests — while opening a fraction of the files."""
     m = read_manifest(path)
     if bbox is None:
-        return spark.read.parquet(path)
+        return _scan(spark, path, m, [path])
     lay = m["layout"]
     hil = lay.get("curve", "morton") == "hilbert"
     ivs = None if hil else _bbox_z_intervals(bbox, lay["res"], tuple(lay["bounds"]))
@@ -887,11 +889,9 @@ def read_zordered(
     ]
     minx, miny, maxx, maxy = bbox
     xc, yc = lay["x"], lay["y"]
-    base = (
-        spark.read.schema(spark.read.parquet(path).schema).parquet(*keep)
-        if keep
-        else spark.read.parquet(path).limit(0)
-    )
+    base = _scan(spark, path, m, keep or [path])
+    if not keep:
+        base = base.limit(0)
     return base.filter(
         (F.col(xc) >= minx) & (F.col(xc) <= maxx)
         & (F.col(yc) >= miny) & (F.col(yc) <= maxy)
@@ -1159,7 +1159,13 @@ def delete_keys_mor(spark: SparkSession, path: str, keys: DataFrame, col: str) -
     v2 equality-delete scoping).  The write never scans the table at
     all: cost is O(|keys|) regardless of table size — the GDPR/right-
     to-be-forgotten shape.  NULL keys are dropped (undeletable by
-    equality)."""
+    equality).  Keys are stored as the table column's type, the type
+    readers read them with; a key the cast changes matches no row and is
+    dropped."""
     m, cur = _current(path)
-    vals = keys.select(F.col(col)).where(F.col(col).isNotNull()).distinct()
+    key = F.col(col)
+    if m.get("schema"):
+        key = key.cast(T.StructType.fromJson(m["schema"])[col].dataType)
+    vals = keys.where(key.isNotNull() & (key == F.col(col)))
+    vals = vals.select(key.alias(col)).distinct()
     return _mor_delete(path, m, cur, vals, "equality", "delete-mor-eq", col=col)

@@ -1,7 +1,7 @@
 """The iceberg-like table reader and its commit paths
-(sources/iceberg_like.py): the manifest's schema drives the scan, every
-commit keeps that schema equal to the data it commits, and only the
-files a write created are committed."""
+(sources/iceberg_like.py): the manifest's schema drives the scan of every
+layout and of the delete files, every commit keeps that schema equal to
+the data it commits, and only the files a write created are committed."""
 
 import json
 import os
@@ -15,11 +15,18 @@ from gregor_spark.sources.iceberg_like import (
     delete_where,
     delete_where_mor,
     merge_table,
+    read_cell_partitioned,
     read_manifest,
     read_table,
+    read_zordered,
     remove_orphan_files,
+    write_cell_partitioned,
     write_table,
+    zorder_skip_report,
+    zorder_table,
 )
+
+BOUNDS = (0.0, 0.0, 16.0, 16.0)
 
 
 def _last_job(spark) -> int:
@@ -60,6 +67,65 @@ def test_read_table_runs_no_job(spark, tmp_path):
         json.dump(m, f)
     assert read_table(spark, path).schema == df.schema
     assert read_table(spark, path).count() == 20
+
+
+def test_merge_on_read_table_read_runs_no_job(spark, tmp_path):
+    """Position deletes read with their fixed schema and equality deletes
+    with the key column's type: building the frame runs no job.  Keys of
+    another type are stored as the column's type; one the cast changes
+    (3.5 on a long key) deletes nothing."""
+    path = str(tmp_path / "t")
+    _table(spark, path)
+    delete_where_mor(spark, path, "k = 4")
+    delete_where_mor(spark, path, "k = 5")
+    keys = spark.createDataFrame([(7.0,), (3.5,)], "k double")
+    delete_keys_mor(spark, path, keys, "k")
+    delete_keys_mor(spark, path, spark.range(9, 10).selectExpr("CAST(id AS int) AS k"), "k")
+    before = _last_job(spark)
+    df = read_table(spark, path)
+    assert _last_job(spark) == before
+    assert df.schema == _inferred(spark, path)
+    assert sorted(r["k"] for r in df.collect()) == sorted(set(range(20)) - {4, 5, 7, 9})
+
+
+def _pts(spark, n=2000):
+    return spark.range(n).select(
+        F.col("id").alias("pid"),
+        (F.col("id") % 40 * 0.4).alias("x"),
+        (F.col("id") / 125.0).alias("y"),
+    )
+
+
+def test_layout_readers_run_no_job(spark, tmp_path):
+    """The cell-partitioned and z-ordered readers take their schema from
+    the manifest: no job for a full read, a bbox read, or (z-order) a
+    bbox that keeps no file; rows are those of a filtered full scan."""
+    cell, z = str(tmp_path / "cell"), str(tmp_path / "z")
+    pts = _pts(spark)
+    write_cell_partitioned(pts, cell, res=8, parent_res=2, bounds=BOUNDS)
+    zorder_table(pts, z, res=8, bounds=BOUNDS, n_files=4)
+    bbox, empty = (2.0, 3.0, 5.0, 6.5), (15.9, 15.9, 16.0, 16.0)
+    before = _last_job(spark)
+    frames = [
+        (cell, read_cell_partitioned(spark, cell), None),
+        (cell, read_cell_partitioned(spark, cell, bbox), bbox),
+        (z, read_zordered(spark, z), None),
+        (z, read_zordered(spark, z, bbox), bbox),
+        (z, read_zordered(spark, z, empty), empty),
+    ]
+    assert _last_job(spark) == before
+    assert zorder_skip_report(z, empty)["files_read"] == 0
+    for path, df, box in frames:
+        full = spark.read.parquet(path)
+        assert df.schema == full.schema
+        if box is not None:
+            full = full.where(
+                (F.col("x") >= box[0]) & (F.col("x") <= box[2])
+                & (F.col("y") >= box[1]) & (F.col("y") <= box[3])
+            )
+        want = sorted(r["pid"] for r in full.collect())
+        assert sorted(r["pid"] for r in df.collect()) == want
+        assert (len(want) == 0) == (box == empty)
 
 
 def test_every_commit_keeps_schema_equal_to_data(spark, tmp_path):
