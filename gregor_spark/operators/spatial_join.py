@@ -7,23 +7,21 @@ order, with interior/boundary flags).  One resolver (``_resolve``) turns
 candidates into a zone id per fact: interior candidates claim outright,
 boundary ones go through the exact PIP kernel, and multi-claims resolve
 deterministically last-id-wins — never partition order (SURVEY.md §7
-hard-part (d)).  The paths differ only in where the candidates come from:
+hard-part (d)).  One size check (``plans/strategy.broadcasts`` on the
+cover's estimate, ``_cover_bytes``) picks where candidates come from:
 
-* **broadcast**: the grouped cover rides in the UDF closure and each
+* **closure** (the cover fits ``autoBroadcastJoinThreshold``, or the
+  caller forces it): the grouped cover rides in the UDF closure and each
   Arrow batch gathers its rows' candidates by ``searchsorted`` on
-  ``cell_id`` — zero shuffle.  The planner picks it when the cover is
-  small (plans/strategy.py).
-* **partitioned**: the grouped cover becomes one row per cell
-  (``cell_id``, ``_z`` zone ids, ``_f`` flags) and joins the facts on
-  ``cell_id``, so every fact meets its candidates in exactly one row and
-  needs no dedup.  **Explicit salting** (north rule) applies only when
-  that join shuffles the facts, i.e. when the cover is above Spark's
-  broadcast threshold (or its size is unknown): a pre-aggregated cell
-  histogram finds hot cells, fact rows there get ``salt =
-  pmod(hash(fact key), k)`` and the hot cover rows explode ×k.  A cover
-  that fits is broadcast instead (the facts stay put, so there is no
-  skew to spread) — admin-sized layers are replicated, not partitioned.
-  AQE skew handling stays on as a second line of defense.
+  ``cell_id`` — map only, zero shuffle.
+* **shuffled** (it does not fit): the grouped cover becomes one row per
+  cell (``cell_id``, ``_z`` zone ids, ``_f`` flags) and joins the facts
+  on ``cell_id``, so every fact meets its candidates in exactly one row
+  and needs no dedup.  **Explicit salting** (north rule,
+  ``salt_threshold``): a pre-aggregated cell histogram finds hot cells,
+  fact rows there get ``salt = pmod(hash(fact key), k)`` and the hot
+  cover rows explode ×k.  AQE skew handling stays on as a second line
+  of defense.
 """
 
 from __future__ import annotations
@@ -244,6 +242,13 @@ def _candidates_col(zones: ZoneSet, x, y, rule: str):
     return assign(x.cast("double"), y.cast("double"), F.col("_z"), F.col("_f"))
 
 
+def _cover_bytes(cover_pairs) -> int:
+    """Catalyst's size estimate of ``_cover_df`` without building it: one
+    row per distinct cell, getSizePerRow of (long, array<long>,
+    array<boolean>) = 8 + 8 + 8 + 1 bytes."""
+    return 25 * len({c for _z, c, _f in cover_pairs})
+
+
 def _cover_df(spark, cover_pairs) -> DataFrame:
     """One row per cover cell: (cell_id, _z array<long>, _f array<boolean>)."""
     cells, offsets, zid, full = _group_cover(cover_pairs)
@@ -292,24 +297,21 @@ def spatial_hash_join(
     one row per fact row.  With ``keep_unassigned``, unmatched rows carry
     NULL zone_id.
 
-    ``broadcast_cover=None`` lets the planner decide (plans/strategy.py);
-    ``salt_threshold`` enables explicit hot-cell salting on the
-    partitioned path when its join shuffles the facts (a cover above
-    ``spark.sql.autoBroadcastJoinThreshold``, or of unknown size); a
-    cover that fits joins as a broadcast with no salt.  ``fact_key`` (a
-    stable id column) feeds the salt hash so salting is deterministic
-    run-to-run.
+    A cover whose size estimate fits ``spark.sql.autoBroadcastJoinThreshold``
+    (plans/strategy.broadcasts) rides in the UDF closure;
+    ``broadcast_cover=True`` forces that path for any cover.  A cover
+    that does not fit joins the facts on ``cell_id`` through a shuffle,
+    salted when ``salt_threshold`` is set.  ``fact_key`` (a stable id
+    column) feeds the salt hash so salting is deterministic run-to-run.
     """
-    from ..plans.strategy import broadcasts, choose_broadcast
+    from ..plans.strategy import broadcasts
 
     cover_pairs = zones.cover(res, bounds)
-    if broadcast_cover is None:
-        broadcast_cover = choose_broadcast(n_cover_rows=len(cover_pairs))
     keyed = with_cell_id(facts, res, bounds, x=x, y=y)
     fact_cols = keyed.columns
     how = "left" if keep_unassigned else "inner"
 
-    if broadcast_cover:
+    if broadcast_cover or broadcasts(facts.sparkSession, _cover_bytes(cover_pairs)):
         zid = zone_id_col(zones, cover_pairs, F.col(x), F.col(y), F.col("cell_id"), rule)
         assigned = keyed.withColumn("zone_id", zid)
         if not keep_unassigned:
@@ -320,11 +322,6 @@ def spatial_hash_join(
     cover = _cover_df(facts.sparkSession, cover_pairs)
     if salt_threshold is None:
         joined = keyed.join(cover, "cell_id", how)
-    elif broadcasts(cover):
-        # the same size check as JoinSelection's, pinned by the hint: the
-        # facts never shuffle, so salting would spread no skew and its
-        # histogram and hot broadcasts would be pure overhead
-        joined = keyed.join(F.broadcast(cover), "cell_id", how)
     else:
         # NB: the skew histogram makes `keyed` dual-consumed, but it is NOT
         # persisted: the encode is pure codegen, so recomputing the scan

@@ -1,7 +1,7 @@
 """Explicit physical-strategy decisions the north rule demands the engine
-own (SURVEY.md §4): broadcast-vs-partitioned spatial join, whether a
-salted join really shuffles, and cell-resolution choice; salting
-parameters come from the callers.  Catalyst/AQE still
+own (SURVEY.md §4): whether the spatial join's zone cover is broadcast
+(the one size check, ``broadcasts``) and cell-resolution choice;
+salting parameters come from the callers.  Catalyst/AQE still
 optimize everything else (pushdown, pruning, codegen, runtime
 coalesce/skew-split)."""
 
@@ -9,29 +9,16 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
-
-# A cover row is (zone_id, cell_id) = 16 bytes + overhead; stay well under
-# Spark's default autoBroadcastJoinThreshold (10 MB) with margin.
-BROADCAST_MAX_COVER_ROWS = 2_000_000
+from pyspark.sql import SparkSession
 
 
-def choose_broadcast(n_cover_rows: int) -> bool:
-    """Broadcast the zone cover when it comfortably fits executor memory —
-    the common case (admin boundaries vs a 100 TB fact table)."""
-    return n_cover_rows <= BROADCAST_MAX_COVER_ROWS
-
-
-def broadcasts(df: DataFrame) -> bool:
-    """Whether Catalyst's JoinSelection broadcasts ``df`` as a join side
-    by size: its zero-job optimizer estimate is at most
-    ``spark.sql.autoBroadcastJoinThreshold``.  An unknown estimate (none,
-    or Long.MAX) or a negative threshold means no."""
-    from .stats import plan_size_bytes
-
-    est = plan_size_bytes(df)
-    limit = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-    return est is not None and 0 <= est <= limit
+def broadcasts(spark: SparkSession, est_bytes: int | None) -> bool:
+    """Whether Catalyst's JoinSelection would broadcast a join side of
+    ``est_bytes`` estimated bytes: the estimate is at most
+    ``spark.sql.autoBroadcastJoinThreshold``.  An unknown estimate
+    (None) or a negative threshold means no."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return est_bytes is not None and 0 <= est_bytes <= limit
 
 
 def choose_resolution(

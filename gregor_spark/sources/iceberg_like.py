@@ -70,6 +70,11 @@ def _scan(spark: SparkSession, path: str, m: dict, files: list[str]) -> DataFram
     return reader.parquet(*files)
 
 
+def _written_schema(df: DataFrame) -> dict:
+    """``df``'s schema as its parquet write lands it: every field nullable."""
+    return json.loads(df._jdf.schema().asNullable().json())
+
+
 def _dir_rows(files) -> dict[str, int]:
     """Rows per ``<col>=<value>`` partition dir, keyed by the value."""
     counts: dict[str, int] = {}
@@ -571,14 +576,13 @@ def write_cell_partitioned(
         with_cell_id(df, res, bounds, x=x, y=y), res, parent_res, out="p_cell"
     )
     keyed.write.mode(mode).partitionBy("p_cell").parquet(path)
-    spark = df.sparkSession
-    written = spark.read.parquet(path)
     cell_rows = _dir_rows(_data_files(path))
     manifest = {
         "format": "gregor-iceberg-like/1",
         "snapshot_id": int(time.time() * 1000),
-        # the WRITTEN schema (source columns + cell_id + p_cell)
-        "schema": written.schema.jsonValue(),
+        # the WRITTEN schema (source columns + cell_id + p_cell, last as
+        # partition inference places it)
+        "schema": _written_schema(keyed),
         "partition_spec": {
             "kind": "cell",
             "res": res,
@@ -732,7 +736,7 @@ def zorder_table(
     manifest = {
         "format": "gregor-iceberg-like/1",
         "snapshot_id": int(time.time() * 1000),
-        "schema": df.sparkSession.read.parquet(path).schema.jsonValue(),
+        "schema": _written_schema(clustered),
         "layout": {
             "kind": "zorder",
             "curve": curve,

@@ -5,9 +5,11 @@ The reference has no streaming surface (SURVEY.md §1: "no streams"), but
 an engine ingesting 10^12 documents does: new corpus files land
 continuously and tile statistics must stay fresh.  The batch operators
 compose directly — geo-span extraction is stateless higher-order column
-work, Morton encode is codegen, and the broadcast assignment UDF is a
-stateless scalar map — so the only genuinely streaming construct is the
-watermarked windowed aggregation at the end.
+work, Morton encode is codegen, and zone assignment takes the batch
+join's decision (``spatial_hash_join``): a cover that fits rides in a
+stateless scalar UDF, one that does not is a stream-static left join —
+so the only genuinely streaming construct is the watermarked windowed
+aggregation at the end.
 
     stream = read_documents_stream(spark, path, with_ts=True)
     q = (tile_counts_stream(stream, res, bounds, zones)
@@ -22,8 +24,7 @@ from pyspark.sql import types as T
 
 from ..geo import cells as C
 from ..model.zones import ZoneSet
-from ..operators.spatial_join import with_cell_id, zone_id_col
-from ..operators.tiles import extract_geo_points
+from ..operators.spatial_join import spatial_hash_join, with_cell_id
 from ..sources.documents import SPAN_SCHEMA
 
 def doc_stream_schema() -> T.StructType:
@@ -71,14 +72,13 @@ def tile_counts_stream(
         parts.getItem(0).cast("double").alias("lon"),
         parts.getItem(1).cast("double").alias("lat"),
     )
-    keyed = with_cell_id(pts, res, bounds, x="lon", y="lat")
-    if zones is not None:
-        zid = zone_id_col(
-            zones, zones.cover(res, bounds), F.col("lon"), F.col("lat"), F.col("cell_id")
-        )
-        keyed = keyed.withColumn("zone_id", zid)
     group_cols = [F.window("ts", window).alias("win"), F.col("cell_id")]
-    if zones is not None:
+    if zones is None:
+        keyed = with_cell_id(pts, res, bounds, x="lon", y="lat")
+    else:
+        keyed = spatial_hash_join(
+            pts, zones, res, bounds, x="lon", y="lat", keep_unassigned=True
+        )
         group_cols.append(F.col("zone_id"))
     return (
         keyed.withWatermark("ts", watermark)

@@ -2,7 +2,8 @@
 the `.explain("formatted")` evidence the scale claims rest on (pushdown,
 pruning, broadcast-only joins, codegen spans, no stray Python eval).
 
-Usage: python scripts/dump_plans.py   (rewrites /root/repo/PLANS.md)
+Usage: python scripts/dump_plans.py   (rewrites the generated sections of
+the repo's PLANS.md and keeps the hand-written ones after them)
 """
 
 from __future__ import annotations
@@ -85,7 +86,7 @@ def main() -> None:
             "Partitioned spatial join with explicit hot-cell salting",
             "The shuffle path for covers that cannot broadcast (planned "
             "with spark.sql.autoBroadcastJoinThreshold=-1; a salted request "
-            "whose cover fits the threshold joins it as a broadcast with "
+            "whose cover fits is assigned by the closure, with no join and "
             "no salt, since the facts never shuffle): explicit histogram "
             "(partial-agg), fact-side pmod(hash, k) salt, hot cover rows "
             "(one per cell, candidate zones as arrays) exploded ×k, then "
@@ -215,8 +216,14 @@ def main() -> None:
     out = [HEADER]
     for title, blurb, plan in sections:
         out.append(f"## {title}\n\n{blurb}\n\n```\n{plan.strip()}\n```\n")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write("\n".join(out))
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
+    # keep the hand-written sections that follow the generated ones
+    with open(path) as f:
+        old = f.read()
+    last = old.find(f"\n## {sections[-1][0]}\n")
+    tail = old.find("\n## ", last + 1) if last >= 0 else -1
+    with open(path, "w") as f:
+        f.write("\n".join(out) + (old[tail:] if tail >= 0 else ""))
     print("wrote PLANS.md")
     spark.stop()
 

@@ -4,7 +4,9 @@ must hold, not just be hoped for (task brief: `.explain` and iterate).
 * bbox clip predicates reach the parquet scan (PushedFilters);
 * column pruning keeps unused columns out of ReadSchema;
 * norm/zone joins in disaggregation go broadcast (no fact shuffle);
-* the broadcast assignment path contains NO Exchange at all (map-only);
+* the closure assignment path contains NO Exchange at all (map-only),
+  and a cover takes it exactly when its estimate fits the broadcast
+  threshold;
 * the partitioned assignment path contains no aggregate;
 * a salted join salts only when its cover cannot broadcast;
 * Morton encode runs inside WholeStageCodegen (no BatchEvalPython).
@@ -18,7 +20,8 @@ from pyspark.sql import functions as F
 from gregor_spark.model import fixtures as FX
 from gregor_spark.model.raster import RasterMeta, clip_bbox, raster_df
 from gregor_spark.model.zones import ZoneSet
-from gregor_spark.operators.spatial_join import spatial_hash_join, with_cell_id
+from gregor_spark.operators.spatial_join import _cover_bytes, spatial_hash_join, with_cell_id
+from tests.helpers import broadcast_threshold, no_auto_broadcast
 
 BOUNDS = (-0.25, 9.75, 1.75, 11.75)
 
@@ -83,34 +86,89 @@ def test_partitioned_assignment_has_no_aggregate(spark, parquet_cells):
     """The partitioned join meets each fact's candidates in one row (the
     cover is grouped by cell), so claims resolve without a groupBy."""
     zones = ZoneSet.from_fixture(FX.SEG_2X2)
-    assigned = spatial_hash_join(
-        parquet_cells, zones, 6, BOUNDS, broadcast_cover=False, keep_unassigned=True
-    )
-    plan = _formatted(assigned)
+    with no_auto_broadcast(spark):  # a cover that fits rides in the closure
+        assigned = spatial_hash_join(
+            parquet_cells, zones, 6, BOUNDS, broadcast_cover=False, keep_unassigned=True
+        )
+        plan = _formatted(assigned)
     assert "HashAggregate" not in plan, plan
 
-def test_salted_request_on_broadcastable_cover_is_a_broadcast_join(spark, parquet_cells):
-    """A cover under the broadcast threshold joins as a broadcast: the
-    facts never shuffle, so no hot-cell histogram and no salt."""
+
+def _is_map_only(plan: str) -> bool:
+    return "ArrowEvalPython" in plan and "Join" not in plan and "Exchange" not in plan
+
+
+def _cover_estimate(zones) -> int:
+    return _cover_bytes(zones.cover(6, BOUNDS))
+
+
+def test_salted_request_on_broadcastable_cover_is_map_only(spark, parquet_cells):
+    """A cover under the broadcast threshold rides in the UDF closure even
+    for a salted request: the facts never shuffle, so no join, no
+    hot-cell histogram and no salt."""
     zones = ZoneSet.from_fixture(FX.SEG_2X2)
     assigned = spatial_hash_join(
         parquet_cells, zones, 6, BOUNDS, broadcast_cover=False, salt_threshold=0,
         salt_factor=4, keep_unassigned=True, fact_key="row",
     )
     plan = _formatted(assigned)
-    assert "BroadcastHashJoin" in plan, plan
-    assert "HashAggregate" not in plan, plan
-    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
-    assert "Generate" not in plan, plan
+    assert _is_map_only(plan), plan
+    assert "HashAggregate" not in plan and "Generate" not in plan, plan
 
 
-def test_salted_join_salts_when_the_cover_cannot_broadcast(spark, parquet_cells, monkeypatch):
-    """With broadcasts by size off (threshold -1), or a cover of unknown
-    size, the salted request plans the histogram and explodes the hot
-    cover rows; its rows equal the broadcast path's."""
-    from gregor_spark.plans import stats
-    from tests.helpers import no_auto_broadcast
+def test_cover_broadcasts_exactly_at_the_threshold(spark, parquet_cells):
+    """The planner's one decision is JoinSelection's: a cover whose
+    estimate equals the threshold is assigned map-only by the closure;
+    one byte less and the cover joins the facts through a shuffle."""
+    zones = ZoneSet.from_fixture(FX.SEG_2X2)
+    est = _cover_estimate(zones)
 
+    def plan():
+        return _formatted(spatial_hash_join(parquet_cells, zones, 6, BOUNDS,
+                                            keep_unassigned=True))
+
+    with broadcast_threshold(spark, est):
+        at = plan()
+    with broadcast_threshold(spark, est - 1):
+        below = plan()
+    assert _is_map_only(at), at
+    assert re.search(r"(SortMerge|ShuffledHash)Join", below), below
+    assert "BroadcastHashJoin" not in below, below
+
+
+def test_cover_estimate_is_catalysts(spark):
+    """``_cover_bytes`` (distinct cells × 25) is exactly the optimizer's
+    estimate of the cover frame it stands in for."""
+    from gregor_spark.operators.spatial_join import _cover_df
+    from gregor_spark.plans.stats import plan_size_bytes
+
+    sizes = set()
+    for fixture, res in ((FX.SEG_2X2, 4), (FX.SEG_OVERLAP, 7)):
+        pairs = ZoneSet.from_fixture(fixture).cover(res, BOUNDS)
+        assert _cover_bytes(pairs) == plan_size_bytes(_cover_df(spark, pairs))
+        sizes.add(_cover_bytes(pairs))
+    assert len(sizes) == 2
+
+
+def test_closure_builds_no_cover_frame(spark, parquet_cells, monkeypatch):
+    """The decision needs no DataFrame: a cover that fits (or a forced
+    closure) never builds ``_cover_df``."""
+    from gregor_spark.operators import spatial_join
+
+    def boom(*_a):
+        raise AssertionError("_cover_df built on the closure path")
+
+    monkeypatch.setattr(spatial_join, "_cover_df", boom)
+    zones = ZoneSet.from_fixture(FX.SEG_2X2)
+    for kw in ({}, {"broadcast_cover": True}, {"broadcast_cover": False, "salt_threshold": 0}):
+        out = spatial_hash_join(parquet_cells, zones, 6, BOUNDS, keep_unassigned=True, **kw)
+        assert _is_map_only(_formatted(out))
+
+
+def test_salted_join_salts_when_the_cover_cannot_broadcast(spark, parquet_cells):
+    """With broadcasts by size off (threshold -1), or a threshold one byte
+    under the cover's estimate, the salted request plans the histogram
+    and explodes the hot cover rows; its rows equal the closure's."""
     zones = ZoneSet.from_fixture(FX.SEG_2X2)
 
     def salted():
@@ -130,8 +188,8 @@ def test_salted_join_salts_when_the_cover_cannot_broadcast(spark, parquet_cells,
         assert "Generate" in plan and "explode" in plan, plan
         assert "HashAggregate" in plan, plan
         assert rows(assigned) == want
-    monkeypatch.setattr(stats, "plan_size_bytes", lambda df: None)
-    assert "Generate" in _formatted(salted())
+    with broadcast_threshold(spark, _cover_estimate(zones) - 1):
+        assert "Generate" in _formatted(salted())
 
 
 def test_morton_encode_is_codegen(spark, parquet_cells):

@@ -110,8 +110,8 @@ def test_holed_zone_through_both_join_paths(spark):
         return {r["id"]: r["zone_id"] for r in out.collect()}
 
     a = run(broadcast_cover=True)
-    b = run(broadcast_cover=False)
-    with no_auto_broadcast(spark):  # a salted join salts only when it shuffles
+    with no_auto_broadcast(spark):  # the join paths join only a cover that does not fit
+        b = run(broadcast_cover=False)
         c = run(broadcast_cover=False, salt_threshold=0, salt_factor=4)
     assert a == b == c
     # and the hole really is a hole: some points unassigned inside it

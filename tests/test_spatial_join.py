@@ -45,11 +45,11 @@ def test_paths_agree(spark, pts):
     broadcast = _as_map(
         spatial_hash_join(pts, zones, RES, BOUNDS, broadcast_cover=True)
     )
-    partitioned = _as_map(
-        spatial_hash_join(pts, zones, RES, BOUNDS, broadcast_cover=False)
-    )
-    # no broadcast by size, or the salted request joins a broadcast cover
+    # no broadcast by size, or a cover that fits rides in the closure
     with no_auto_broadcast(spark):
+        partitioned = _as_map(
+            spatial_hash_join(pts, zones, RES, BOUNDS, broadcast_cover=False)
+        )
         salted = _as_map(
             spatial_hash_join(
                 pts, zones, RES, BOUNDS, broadcast_cover=False, salt_threshold=10,
@@ -71,12 +71,13 @@ def test_left_join_keeps_unassigned(spark, pts):
 
 def test_determinism_across_parallelism(spark, pts):
     zones = ZoneSet.from_fixture(FX.SEG_OVERLAP)
-    one = _as_map(
-        spatial_hash_join(pts.repartition(1), zones, RES, BOUNDS, broadcast_cover=False)
-    )
-    many = _as_map(
-        spatial_hash_join(pts.repartition(16), zones, RES, BOUNDS, broadcast_cover=False)
-    )
+    with no_auto_broadcast(spark):  # the partitioned join, not the closure
+        one = _as_map(
+            spatial_hash_join(pts.repartition(1), zones, RES, BOUNDS, broadcast_cover=False)
+        )
+        many = _as_map(
+            spatial_hash_join(pts.repartition(16), zones, RES, BOUNDS, broadcast_cover=False)
+        )
     assert one == many
 
 
@@ -230,8 +231,8 @@ def test_paths_agree_on_adversarial_facts(spark, path, layer):
     expected = Counter(
         (i, None if z < 0 else int(z)) for (i, _x, _y), z in zip(rows, want)
     )
-    # the salted case salts only a join that shuffles
-    with no_auto_broadcast(spark) if path == "salted" else nullcontext():
+    # the join paths join only a cover that does not fit
+    with no_auto_broadcast(spark) if path in ("partitioned", "salted") else nullcontext():
         got = Counter(
             (r["id"], r["zone_id"])
             for r in _run_path(path, facts, zones).select("id", "zone_id").collect()

@@ -1,31 +1,23 @@
 """Planner heuristics (plans/strategy.py)."""
 
-from gregor_spark.plans.strategy import (
-    BROADCAST_MAX_COVER_ROWS,
-    broadcasts,
-    choose_broadcast,
-    choose_resolution,
-)
-
-
-def test_choose_broadcast_threshold():
-    assert choose_broadcast(1000)
-    assert choose_broadcast(BROADCAST_MAX_COVER_ROWS)
-    assert not choose_broadcast(BROADCAST_MAX_COVER_ROWS + 1)
+from gregor_spark.plans.strategy import broadcasts, choose_resolution
 
 
 def test_broadcasts_follows_the_join_threshold(spark):
     """The zero-job size check matches JoinSelection's: a known estimate
-    at most the threshold broadcasts; an unknown one (Long.MAX) or a
-    negative threshold never does."""
-    from tests.helpers import no_auto_broadcast
+    at most the threshold broadcasts; an unknown one (None), one above
+    the threshold (Long.MAX, an RDD leaf's), or a negative threshold
+    never does."""
+    from tests.helpers import broadcast_threshold, no_auto_broadcast
 
-    small = spark.range(10)
-    assert broadcasts(small)
-    unknown = spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "a long")
-    assert not broadcasts(unknown)
+    assert broadcasts(spark, 0)
+    with broadcast_threshold(spark, 1000):
+        assert broadcasts(spark, 1000)
+        assert not broadcasts(spark, 1001)
+    assert not broadcasts(spark, None)
+    assert not broadcasts(spark, (1 << 63) - 1)
     with no_auto_broadcast(spark):
-        assert not broadcasts(small)
+        assert not broadcasts(spark, 0)
 
 
 def test_choose_resolution_monotone():

@@ -1,6 +1,8 @@
 """Structured Streaming: file-source tile pipeline == batch result, and
 the applyInPandasWithState sessionizer == the batch window sessionizer."""
 
+from contextlib import nullcontext
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -10,12 +12,16 @@ from gregor_spark.operators.spatial_join import spatial_hash_join, with_cell_id
 from gregor_spark.operators.tiles import extract_geo_points
 from gregor_spark.sources.documents import generate_documents
 from gregor_spark.streaming.tiles_stream import read_documents_stream, tile_counts_stream
+from tests.helpers import no_auto_broadcast
 
 BOUNDS = (-0.25, 9.75, 1.75, 11.75)
 RES = 5
 
 
 def test_stream_matches_batch(spark, tmp_path):
+    """The stream's zone assignment takes the batch join's decision: a
+    cover that fits rides in the closure, and with broadcasts by size off
+    it is a stream-static left join; both give the batch counts."""
     docs = generate_documents(spark, 1500, BOUNDS, seed=9).withColumn(
         "ts",
         F.to_timestamp(F.lit("2024-01-01 00:00:00"))
@@ -24,22 +30,6 @@ def test_stream_matches_batch(spark, tmp_path):
     src = str(tmp_path / "stream_src")
     docs.write.parquet(src)
     zones = ZoneSet.from_fixture(FX.SEG_2X2)
-
-    stream = read_documents_stream(spark, src, max_files_per_trigger=2)
-    counts = tile_counts_stream(stream, RES, BOUNDS, zones=zones, window="2 minutes")
-    q = (
-        counts.writeStream.format("memory")
-        .queryName("tile_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["win"]["start"], r["cell_id"], r["zone_id"]): r["n_spans"]
-        for r in spark.sql("SELECT * FROM tile_counts").collect()
-    }
-    assert got
 
     # batch reference computation over the same files
     batch_docs = spark.read.parquet(src)
@@ -57,7 +47,29 @@ def test_stream_matches_batch(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n_spans"))
         .collect()
     }
-    assert got == want
+    assert want
+
+    runs = (("tile_counts", nullcontext(), False),
+            ("tile_counts_joined", no_auto_broadcast(spark), True))
+    for name, ctx, joins in runs:
+        with ctx:
+            stream = read_documents_stream(spark, src, max_files_per_trigger=2)
+            counts = tile_counts_stream(stream, RES, BOUNDS, zones=zones, window="2 minutes")
+            plan = counts._jdf.queryExecution().analyzed().toString()
+            assert ("Join LeftOuter" in plan) == joins, plan
+            q = (
+                counts.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+        got = {
+            (r["win"]["start"], r["cell_id"], r["zone_id"]): r["n_spans"]
+            for r in spark.sql(f"SELECT * FROM {name}").collect()
+        }
+        assert got == want, name
 
 
 def test_stateful_sessionizer_matches_batch(spark, tmp_path):

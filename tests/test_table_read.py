@@ -128,6 +128,35 @@ def test_layout_readers_run_no_job(spark, tmp_path):
         assert (len(want) == 0) == (box == empty)
 
 
+def test_layout_writers_record_the_written_schema_in_one_pass(spark, tmp_path):
+    """The cell-partitioned and z-ordered writers take the manifest schema
+    from the plan they write, not from a re-read: the cell writer runs
+    one job, and the recorded schema is what inference gives for the
+    written files (names, types, nullability, p_cell last).  The rows
+    read back are the rows written."""
+    from pyspark.sql import types as T
+
+    cell, z = str(tmp_path / "cell"), str(tmp_path / "z")
+    pts = _pts(spark).withColumn("near", F.array("pid", F.col("pid") + 1))
+    jobs = {}
+    for path, write in (
+        (cell, lambda: write_cell_partitioned(pts, cell, res=8, parent_res=2, bounds=BOUNDS)),
+        (z, lambda: zorder_table(pts, z, res=8, bounds=BOUNDS, n_files=4)),
+    ):
+        before = _last_job(spark)
+        write()
+        jobs[path] = _last_job(spark) - before
+        recorded = T.StructType.fromJson(read_manifest(path)["schema"])
+        assert recorded == spark.read.parquet(path).schema
+    # no re-read: the cell write is one job, the z-order write three
+    # (range-bound sampling, the sort and the write)
+    assert jobs == {cell: 1, z: 3}
+    assert read_manifest(cell)["schema"]["fields"][-1]["name"] == "p_cell"
+    want = sorted(pts.collect())
+    for df in (read_cell_partitioned(spark, cell), read_zordered(spark, z)):
+        assert sorted(df.select(*pts.columns).collect()) == want
+
+
 def test_every_commit_keeps_schema_equal_to_data(spark, tmp_path):
     """Append, copy-on-write merge and delete, merge-on-read deletes and
     compaction each leave the manifest schema equal to what the
