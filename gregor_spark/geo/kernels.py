@@ -20,12 +20,26 @@ semantics without GDAL/GEOS, derived from its golden test matrices
   ``aggregate.py:121``, ``disaggregate.py:184-186``): even-odd ray cast,
   boundary points excluded.
 
-Everything is vectorized over points: O(E) passes of O(N) numpy work for
-E polygon edges, N points.  Designed to be called from Arrow-batched
-pandas UDFs (no per-row Python anywhere).
+Two shapes of the same tests, both free of per-row Python and fed by one
+definition of the per-(point, edge) arithmetic (``_spans``/``_left_of``
+for the crossing, ``_edge_box``/``_in_box``/``_on_line`` for the
+boundary):
+
+* the ring-list kernels test ONE zone against many points, one numpy pass
+  over the points per edge (O(E) passes of O(N) work); the golden
+  matrices pin them, and the points-within operators and references use
+  them;
+* ``slab_claims`` tests a batch's (point, zone) candidates across MANY
+  zones at once over a flat ``EdgeTable``: each edge meets only the
+  candidates of its zone inside its y-slab, in a fixed number of numpy
+  calls per batch.  The claim resolver (operators/spatial_join.py) runs
+  it for every Arrow batch, where a per-zone loop would pay a per-call
+  overhead per zone and per edge.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -56,6 +70,49 @@ def _ring_edges(xs: np.ndarray, ys: np.ndarray):
     return xs, ys, x2, y2
 
 
+# The per-(point, edge) tests, written once: the ring loops below call
+# them with one edge's scalars (skipping the second test when the first
+# holds for no point), ``slab_claims`` with per-pair arrays.
+
+
+def _spans(py, ay, by):
+    """The edge a→b spans ``py`` half-open in y — the crossing test's
+    first half (never true for a horizontal edge)."""
+    return (ay > py) != (by > py)
+
+
+def _left_of(px, py, ax, ay, bx, by):
+    """(px, py) lies left of where the edge a→b meets the line y = py —
+    the crossing test's second half, meaningful where ``_spans`` holds."""
+    return px < ax + (py - ay) * (bx - ax) / (by - ay)
+
+
+def _edge_box(ax, ay, bx, by, eps):
+    """Per-edge constants of the on-edge test: the eps-expanded bounding
+    box ``(x_lo, x_hi, y_lo, y_hi)`` and the collinearity tolerance
+    (``eps`` scaled by the edge's longer axis, at least 1).  Vectorized
+    over edges."""
+    return (
+        np.minimum(ax, bx) - eps,
+        np.maximum(ax, bx) + eps,
+        np.minimum(ay, by) - eps,
+        np.maximum(ay, by) + eps,
+        eps * np.maximum(np.maximum(np.abs(bx - ax), np.abs(by - ay)), 1.0),
+    )
+
+
+def _in_box(px, py, x_lo, x_hi, y_lo, y_hi):
+    """(px, py) lies in an edge's expanded box — the on-edge test's first
+    half."""
+    return (px >= x_lo) & (px <= x_hi) & (py >= y_lo) & (py <= y_hi)
+
+
+def _on_line(px, py, ax, ay, bx, by, tol):
+    """(px, py) is within ``tol`` of the line through a and b — the
+    on-edge test's second half."""
+    return np.abs((bx - ax) * (py - ay) - (by - ay) * (px - ax)) <= tol
+
+
 def points_strictly_inside(
     px: np.ndarray, py: np.ndarray, xs: np.ndarray, ys: np.ndarray
 ) -> np.ndarray:
@@ -65,16 +122,21 @@ def points_strictly_inside(
     py = np.asarray(py, dtype=np.float64)
     x1, y1, x2, y2 = _ring_edges(xs, ys)
     inside = np.zeros(px.shape, dtype=bool)
-    for i in range(len(x1)):
-        a_y, b_y = y1[i], y2[i]
-        if a_y == b_y:
+    for ax, ay, bx, by in zip(x1, y1, x2, y2):
+        if ay == by:
             continue  # horizontal edge never crosses a +x ray test
-        cond = (a_y > py) != (b_y > py)
-        if not cond.any():
-            continue
-        xint = x1[i] + (py - a_y) * (x2[i] - x1[i]) / (b_y - a_y)
-        inside ^= cond & (px < xint)
+        cond = _spans(py, ay, by)
+        if cond.any():
+            inside ^= cond & _left_of(px, py, ax, ay, bx, by)
     return inside
+
+
+def _west_walls(ax, ay, bx, by, ccw: bool) -> np.ndarray:
+    """Per-edge flags of one ring's west walls: vertical edges whose
+    polygon interior lies on their +x side.  Interior is left of travel
+    on a CCW ring, so there an edge going down is a west wall; ``ccw``
+    is the ring's orientation flipped for a hole."""
+    return (ax == bx) & (ay != by) & ((by < ay) == ccw)
 
 
 def on_boundary_masks(
@@ -104,28 +166,16 @@ def on_boundary_masks(
     ccw = (signed_area(xs, ys) > 0) != hole
     on_any = np.zeros(px.shape, dtype=bool)
     on_west = np.zeros(px.shape, dtype=bool)
+    x_lo, x_hi, y_lo, y_hi, tol = _edge_box(x1, y1, x2, y2, eps)
+    west = _west_walls(x1, y1, x2, y2, ccw)
     for i in range(len(x1)):
-        ax, ay, bx, by = x1[i], y1[i], x2[i], y2[i]
-        minx, maxx = (ax, bx) if ax <= bx else (bx, ax)
-        miny, maxy = (ay, by) if ay <= by else (by, ay)
-        inbox = (
-            (px >= minx - eps)
-            & (px <= maxx + eps)
-            & (py >= miny - eps)
-            & (py <= maxy + eps)
-        )
+        inbox = _in_box(px, py, x_lo[i], x_hi[i], y_lo[i], y_hi[i])
         if not inbox.any():
             continue
-        cross = (bx - ax) * (py - ay) - (by - ay) * (px - ax)
-        scale = max(abs(bx - ax), abs(by - ay), 1.0)
-        on_seg = inbox & (np.abs(cross) <= eps * scale)
+        on_seg = inbox & _on_line(px, py, x1[i], y1[i], x2[i], y2[i], tol[i])
         on_any |= on_seg
-        if ax == bx and ay != by:
-            going_down = by < ay
-            # CCW ring: interior is left of travel; going down => left is +x.
-            interior_right = going_down if ccw else not going_down
-            if interior_right:
-                on_west |= on_seg
+        if west[i]:
+            on_west |= on_seg
     return on_any, on_west
 
 
@@ -182,6 +232,136 @@ def points_within_rings(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
     even-odd parity AND not on any ring boundary."""
     on_any, _w = on_boundary_masks_rings(px, py, rings)
     return points_inside_rings(px, py, rings) & ~on_any
+
+
+# ---------------------------------------------------------- edge slabs
+#
+# The ring-list kernels above test one zone against many points.  The
+# claim resolver meets the opposite shape: per Arrow batch, a few
+# candidates for each of many zones.  ``slab_claims`` tests all of them
+# in a fixed number of numpy calls over one flat table of every zone's
+# edges.  Candidates are ordered by (zone, y), so each edge reaches the
+# candidates of its zone inside its eps-expanded y-range (its "slab") by
+# two ``searchsorted`` calls, and only those (candidate, edge) pairs are
+# evaluated.  That is exact: a ray crosses an edge only when
+# ``min(ay, by) <= py < max(ay, by)``, and a point can lie on an edge
+# only inside its expanded y-range.  NaN coordinates fall in no slab.
+
+#: most (candidate, edge) pairs one pass of ``slab_claims`` holds
+PAIR_CHUNK = 1 << 20
+
+
+class EdgeTable(NamedTuple):
+    """Every edge of every zone, flat: zone ``ids`` ascending, each
+    edge's index into them (``zone``), its endpoints, its ``_edge_box``
+    constants (``y_lo``/``y_hi`` bound its slab) and its west-wall flag.
+    A closing vertex that repeats the first is dropped, as in
+    ``_ring_edges``."""
+
+    ids: np.ndarray
+    zone: np.ndarray
+    ax: np.ndarray
+    ay: np.ndarray
+    bx: np.ndarray
+    by: np.ndarray
+    x_lo: np.ndarray
+    x_hi: np.ndarray
+    y_lo: np.ndarray
+    y_hi: np.ndarray
+    tol: np.ndarray
+    west: np.ndarray
+
+
+def edge_table(zone_ids: np.ndarray, zone_rings: list, eps: float = 1e-9) -> EdgeTable:
+    """The ``EdgeTable`` of ring-list zones (``zone_rings`` aligned with
+    ``zone_ids``), built once per layer."""
+    zone_ids = np.asarray(zone_ids, dtype=np.int64)
+    order = np.argsort(zone_ids, kind="stable")
+    parts = []
+    for k, i in enumerate(order):
+        for xs, ys, hole in zone_rings[i]:
+            ax, ay, bx, by = _ring_edges(xs, ys)
+            ccw = (signed_area(xs, ys) > 0) != hole
+            west = _west_walls(ax, ay, bx, by, ccw)
+            parts.append((np.full(len(ax), k, dtype=np.int64), ax, ay, bx, by, west))
+    if not parts:
+        parts = [(np.empty(0, np.int64),) + (np.empty(0),) * 4 + (np.empty(0, bool),)]
+    zone, ax, ay, bx, by, west = (np.concatenate(c) for c in zip(*parts))
+    return EdgeTable(zone_ids[order], zone, ax, ay, bx, by, *_edge_box(ax, ay, bx, by, eps), west)
+
+
+def slab_claims(
+    tab: EdgeTable,
+    px: np.ndarray,
+    py: np.ndarray,
+    owner: np.ndarray,
+    zid: np.ndarray,
+    rule: str = "raster",
+) -> np.ndarray:
+    """Claim mask of candidates: candidate ``i`` is row ``owner[i]`` of
+    the points ``(px, py)`` tested against zone ``zid[i]``, under the
+    ``"raster"`` rule (``claims_raster_cell_rings``) or ``"within"``
+    (``points_within_rings``), bit for bit.  Each row's candidates must
+    be one run of ``owner`` (non-decreasing), and every id must be in
+    ``tab.ids``; either violation raises."""
+    n, c = len(px), len(owner)
+    if c == 0:
+        return np.zeros(0, dtype=bool)
+    if np.any(owner[1:] < owner[:-1]):
+        raise ValueError("slab_claims: owner must be non-decreasing")
+    zone = np.searchsorted(tab.ids, zid)
+    if len(tab.ids) == 0 or np.any(tab.ids.take(zone, mode="clip") != zid):
+        raise KeyError("slab_claims: candidate zone id not in the edge table")
+    # order candidates by (zone, y): the rows that have candidates by y
+    # once, each row's run of candidates in that order, then a stable
+    # sort by zone index
+    cnt = np.bincount(owner, minlength=n)
+    rows = np.flatnonzero(cnt)
+    ry = rows[np.argsort(py[rows])]
+    rank = np.empty(n, dtype=np.int64)
+    rank[ry] = np.arange(len(ry))
+    m = cnt[ry]
+    by_y = np.arange(c) + np.repeat((np.cumsum(cnt) - cnt)[ry] - (np.cumsum(m) - m), m)
+    zone_y = zone[by_y]
+    if len(tab.ids) <= np.iinfo(np.int16).max:
+        zone_y = zone_y.astype(np.int16)  # a stable sort of int16 is a radix sort
+    order = by_y[np.argsort(zone_y, kind="stable")]
+    key = zone[order] * len(ry) + rank[owner[order]]
+    # each edge's pairs: its zone's candidates with y_lo <= y <= y_hi
+    ys = py[ry]
+    base = tab.zone * len(ry)
+    start = np.searchsorted(key, base + np.searchsorted(ys, tab.y_lo, "left"))
+    npair = np.searchsorted(key, base + np.searchsorted(ys, tab.y_hi, "right")) - start
+    first = np.cumsum(npair) - npair  # each edge's first pair
+    total = int(npair.sum())
+    crossings = np.zeros(c, dtype=np.int64)
+    on_any = np.zeros(c, dtype=np.int64)
+    on_west = np.zeros(c, dtype=np.int64)
+    with np.errstate(divide="ignore", invalid="ignore"):  # horizontal edges
+        for p0 in range(0, total, PAIR_CHUNK):
+            # pairs [p0, p1) span edges [e0, e1): each one's share k
+            p1 = min(p0 + PAIR_CHUNK, total)
+            e0, e1 = np.searchsorted(first, [p0, p1], "right")
+            e0 -= 1
+            lo = np.maximum(first[e0:e1], p0)
+            k = np.minimum(first[e0:e1] + npair[e0:e1], p1) - lo
+            e = np.repeat(np.arange(e0, e1), k)
+            skip = start[e0:e1] + lo - first[e0:e1] - (np.cumsum(k) - k)
+            cand = order[np.arange(p1 - p0) + np.repeat(skip, k)]
+            row = owner[cand]
+            x, y = px[row], py[row]
+            ax, ay, bx, by = tab.ax[e], tab.ay[e], tab.bx[e], tab.by[e]
+            hit = _spans(y, ay, by) & _left_of(x, y, ax, ay, bx, by)
+            on = _in_box(x, y, tab.x_lo[e], tab.x_hi[e], tab.y_lo[e], tab.y_hi[e])
+            on &= _on_line(x, y, ax, ay, bx, by, tab.tol[e])
+            crossings += np.bincount(cand[hit], minlength=c)
+            on_any += np.bincount(cand[on], minlength=c)
+            on_west += np.bincount(cand[on & tab.west[e]], minlength=c)
+    inside = (crossings & 1).astype(bool)
+    on_any = on_any > 0
+    if rule == "raster":
+        return (inside & ~on_any) | (on_any & (on_west == 0))
+    return inside & ~on_any
 
 
 def assign_cells_rings(

@@ -9,10 +9,16 @@ O(polygons) loop of full-raster masks.
 Last-id-wins raster assignment has one resolver for every path
 (operators/spatial_join.py): ``assign_cells_df`` here hands it every
 zone as a boundary candidate of one constant cell, so only ``x, y``
-cross into Python and each zone is tested exactly;
-``spatial_hash_join`` narrows the candidates by a cell cover first,
-broadcast or partitioned, for fact tables and zone layers at scale.
-All paths produce identical assignments (tests/test_spatial_join.py).
+cross into Python and each batch's (point, zone) candidates are tested
+exactly in one edge-slab pass (geo/kernels.slab_claims: each zone edge
+meets only the points inside its y-range); ``spatial_hash_join``
+narrows the candidates by a cell cover first, broadcast or partitioned,
+for fact tables and zone layers at scale.  All paths produce identical
+assignments (tests/test_spatial_join.py).
+
+The points-within operators test one zone against a whole batch at a
+time, the shape the ring-list kernels serve best (a slab pass measured
+slower there), so they keep them.
 """
 
 from __future__ import annotations

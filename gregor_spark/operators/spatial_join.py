@@ -5,10 +5,13 @@ chosen resolution, and the zone cover is grouped by cell once on the
 driver (``_group_cover``: each cell's candidate zones in ascending id
 order, with interior/boundary flags).  One resolver (``_resolve``) turns
 candidates into a zone id per fact: interior candidates claim outright,
-boundary ones go through the exact PIP kernel, and multi-claims resolve
-deterministically last-id-wins — never partition order (SURVEY.md §7
-hard-part (d)).  One size check (``plans/strategy.broadcasts`` on the
-cover's estimate, ``_cover_bytes``) picks where candidates come from:
+and an Arrow batch's boundary candidates, across all their zones, go
+through one exact edge-slab pass (geo/kernels.slab_claims) over the
+layer's ``EdgeTable``, built once per call and carried in the UDF
+closure.  Multi-claims resolve deterministically last-id-wins — never
+partition order (SURVEY.md §7 hard-part (d)).  One size check
+(``plans/strategy.broadcasts`` on the cover's estimate,
+``_cover_bytes``) picks where candidates come from:
 
 * **closure** (the cover fits ``autoBroadcastJoinThreshold``, or the
   caller forces it): the grouped cover rides in the UDF closure and each
@@ -47,12 +50,17 @@ _PART1BY1_MASKS = (
 )
 
 
-def _part1by1_col(v):
-    """Interleave zeros between the low 32 bits — the same magic-mask
-    ladder as geo/cells._part1by1, as pure column bit-ops."""
-    v = v.bitwiseAND(F.lit(0xFFFFFFFF))
+def _part1by1_col(v, bits: int = 32):
+    """Interleave zeros between the low ``bits`` bits — the same
+    magic-mask ladder as geo/cells._part1by1, as pure column bit-ops.  A
+    rung whose shift is ``bits`` or more leaves a value below
+    ``2**bits`` as it is, so only the lower rungs are emitted; a caller
+    passing ``bits < 32`` guarantees ``0 <= v < 2**bits``."""
+    if bits >= 32:
+        v = v.bitwiseAND(F.lit(0xFFFFFFFF))
     for shift, mask in _PART1BY1_MASKS:
-        v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
+        if shift < bits:
+            v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
     return v
 
 
@@ -146,8 +154,9 @@ def cell_id_col(
         t = F.floor(f * F.lit(float(n))).cast("long")
         return F.greatest(F.lit(0), F.least(F.lit(n - 1), t))
 
-    morton = _part1by1_col(tile(x, minx, maxx)).bitwiseOR(
-        F.shiftleft(_part1by1_col(tile(y, miny, maxy)), 1)
+    # tile() is clamped to [0, n), so only the rungs below res apply
+    morton = _part1by1_col(tile(x, minx, maxx), res).bitwiseOR(
+        F.shiftleft(_part1by1_col(tile(y, miny, maxy), res), 1)
     )
     return F.lit(res << 56).bitwiseOR(morton)
 
@@ -180,23 +189,19 @@ def _group_cover(cover_pairs: list[tuple[int, int, bool]]):
     return cells, offsets, zid[order], full[order]
 
 
-def _resolve(xs: pa.Array, ys: pa.Array, owner, zid, full, lookup: dict, rule: str) -> pa.Array:
+def _resolve(xs: pa.Array, ys: pa.Array, owner, zid, full, edges: K.EdgeTable, rule: str) -> pa.Array:
     """THE claim resolver: candidate ``i`` proposes zone ``zid[i]`` for row
-    ``owner[i]``.  Full (interior) candidates claim outright; the others go
-    through the exact kernel, one pass per distinct zone.  Multi-claims
+    ``owner[i]`` (non-decreasing).  Full (interior) candidates claim
+    outright; the others go through one edge-slab pass
+    (``kernels.slab_claims``) across all their zones.  Multi-claims
     resolve last-id-wins (the highest claiming id) — never batch or
     partition order.  Returns one zone id per row, NULL = unassigned."""
-    claim_fn = K.claims_raster_cell_rings if rule == "raster" else K.points_within_rings
     # NULL coordinates become NaN, which no kernel claims
     px = xs.to_numpy(zero_copy_only=False)
     py = ys.to_numpy(zero_copy_only=False)
     keep = full.copy()
     todo = np.flatnonzero(~full)
-    todo = todo[np.argsort(zid[todo], kind="stable")]
-    zs, starts = np.unique(zid[todo], return_index=True)
-    for z, sel in zip(zs, np.split(todo, starts[1:])):
-        rows = owner[sel]
-        keep[sel] = claim_fn(px[rows], py[rows], lookup[int(z)])
+    keep[todo] = K.slab_claims(edges, px, py, owner[todo], zid[todo], rule)
     out = np.full(len(xs), -1, dtype=np.int64)
     np.maximum.at(out, owner[keep], zid[keep])
     return pa.array(out, mask=out < 0, type=pa.int64())
@@ -205,10 +210,11 @@ def _resolve(xs: pa.Array, ys: pa.Array, owner, zid, full, lookup: dict, rule: s
 def zone_id_col(zones: ZoneSet, cover_pairs, x, y, cell, rule: str = "raster"):
     """Zone id (NULL = unassigned) of each row from its ``cell`` column and
     the ``(zone_id, cell_id, full)`` cover, which rides grouped by cell in
-    the UDF closure — map only, zero shuffle.  Arrow moves just (x, y,
-    cell); per batch one ``searchsorted`` gathers every row's candidates."""
+    the UDF closure with the zones' edge table — map only, zero shuffle.
+    Arrow moves just (x, y, cell); per batch one ``searchsorted`` gathers
+    every row's candidates and one slab pass refines them."""
     cells, offsets, cand_z, cand_f = _group_cover(cover_pairs)
-    lookup = zones.geometry_lookup()
+    edges = K.edge_table(zones.zone_ids, zones.rings_list())
 
     @F.arrow_udf(T.LongType())
     def assign(xs: pa.Array, ys: pa.Array, cs: pa.Array) -> pa.Array:
@@ -221,7 +227,7 @@ def zone_id_col(zones: ZoneSet, cover_pairs, x, y, cell, rule: str = "raster"):
         cnt = np.where(cells[pos] == cid, offsets[pos + 1] - start, 0)
         owner = np.repeat(np.arange(n), cnt)
         idx = np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt - start, cnt)
-        return _resolve(xs, ys, owner, cand_z[idx], cand_f[idx], lookup, rule)
+        return _resolve(xs, ys, owner, cand_z[idx], cand_f[idx], edges, rule)
 
     return assign(x.cast("double"), y.cast("double"), cell)
 
@@ -229,7 +235,7 @@ def zone_id_col(zones: ZoneSet, cover_pairs, x, y, cell, rule: str = "raster"):
 def _candidates_col(zones: ZoneSet, x, y, rule: str):
     """Zone id of each joined row from its per-cell candidate arrays
     (``_z`` zone ids, ``_f`` interior flags; NULL when no cell matched)."""
-    lookup = zones.geometry_lookup()
+    edges = K.edge_table(zones.zone_ids, zones.rings_list())
 
     @F.arrow_udf(T.LongType())
     def assign(xs: pa.Array, ys: pa.Array, zs: pa.Array, fs: pa.Array) -> pa.Array:
@@ -237,7 +243,7 @@ def _candidates_col(zones: ZoneSet, x, y, rule: str):
         owner = np.repeat(np.arange(len(zs)), cnt)
         zid = zs.flatten().to_numpy()
         full = fs.flatten().to_numpy(zero_copy_only=False)
-        return _resolve(xs, ys, owner, zid, full, lookup, rule)
+        return _resolve(xs, ys, owner, zid, full, edges, rule)
 
     return assign(x.cast("double"), y.cast("double"), F.col("_z"), F.col("_f"))
 

@@ -314,3 +314,152 @@ def test_general_rings_holed_concave():
     #   L upper arm = [0,1]x[1,3] -> [0,1]x[1,2] area 1 ; lower 3x1=3
     # minus hole (entirely inside [0,3]x[0,1] and inside clip): 0.5*0.5
     assert got == pytest.approx(3.0 + 1.0 - 0.25, rel=1e-12)
+
+
+# ------------------------------------------------- edge-slab resolver
+#
+# ``spatial_join._resolve`` refines a batch's boundary candidates with one
+# ``slab_claims`` pass over a flat edge table.  These pin it, bit for bit,
+# to the per-zone ring-list kernels plus last-id-wins, on points placed
+# exactly on every vertex and edge.
+
+BIG = (1 << 53) + 1  # zone ids float64 cannot hold exactly
+
+
+def _odd_rings_layer():
+    """A two-part zone, a ring given closed, a ring with a repeated vertex
+    (a zero-length edge), shared vertical and horizontal edges, and ids
+    above 2^53."""
+    from gregor_spark.model.zones import ZoneSet
+
+    xs = [
+        np.array([0.0, 0.5, 0.5, 0.0]),  # part one of the two-part zone
+        np.array([0.5, 1.0, 1.0, 0.5, 0.5]),  # closed; shares x = 0.5
+        np.array([0.0, 1.0, 1.0, 1.0, 0.0]),  # repeated vertex (1, 10.5)
+    ]
+    ys = [
+        np.array([10.0, 10.0, 10.5, 10.5]),
+        np.array([10.0, 10.0, 10.5, 10.5, 10.0]),
+        np.array([10.5, 10.5, 11.0, 11.0, 11.0]),  # shares y = 10.5
+    ]
+    extra = [[(np.array([1.25, 1.5, 1.5]), np.array([10.0, 10.0, 10.25]), False)], [], []]
+    return ZoneSet(np.array([BIG + 2, BIG, BIG + 1]), xs, ys, extra_rings=extra)
+
+
+def _slab_layers():
+    from gregor_spark.model.zones import ZoneSet
+
+    layers = {
+        name: ZoneSet.from_fixture(getattr(FX, name))
+        for name in ("SEG_OVERLAP", "SEG_HOLED", "SEG_CONCAVE", "SEG_2X2", "SEG_3X3")
+    }
+    layers["odd_rings"] = _odd_rings_layer()
+    return layers
+
+
+def _boundary_points(zones, seed):
+    """Every vertex and every edge midpoint of every ring, a random
+    scatter over the layer's box, and NaN coordinates."""
+    px, py = [], []
+    for rings in zones.rings_list():
+        for xs, ys, _hole in rings:
+            xs, ys = np.asarray(xs, float), np.asarray(ys, float)
+            px += [xs, (xs + np.roll(xs, -1)) / 2]
+            py += [ys, (ys + np.roll(ys, -1)) / 2]
+    minx, miny, maxx, maxy = zones.total_bounds()
+    rng = np.random.RandomState(seed)
+    px.append(rng.uniform(minx - 0.1, maxx + 0.1, 200))
+    py.append(rng.uniform(miny - 0.1, maxy + 0.1, 200))
+    px.append(np.array([np.nan, 0.5, np.nan]))
+    py.append(np.array([10.5, np.nan, np.nan]))
+    return np.concatenate(px), np.concatenate(py)
+
+
+def _random_candidates(zones, n, rng):
+    """Each row proposes a random subset of the zones in ascending id
+    order (the cover's layout), some of them flagged interior."""
+    ids = np.sort(zones.zone_ids)
+    pick = rng.rand(n, len(ids)) < 0.7
+    owner = np.repeat(np.arange(n), pick.sum(axis=1))
+    zid = np.tile(ids, n)[pick.ravel()]
+    full = rng.rand(len(zid)) < 0.1
+    return owner, zid, full
+
+
+def _resolve_reference(px, py, owner, zid, full, zones, rule):
+    """The per-zone resolver: one ring-list kernel call per distinct zone
+    on that zone's boundary candidates, then last-id-wins."""
+    claim = K.claims_raster_cell_rings if rule == "raster" else K.points_within_rings
+    lookup = zones.geometry_lookup()
+    keep = full.copy()
+    for z in np.unique(zid[~full]):
+        sel = np.flatnonzero(~full & (zid == z))
+        keep[sel] = claim(px[owner[sel]], py[owner[sel]], lookup[int(z)])
+    out = np.full(len(px), -1, dtype=np.int64)
+    np.maximum.at(out, owner[keep], zid[keep])
+    return out
+
+
+def _resolved(px, py, owner, zid, full, zones, rule):
+    import pyarrow as pa
+
+    from gregor_spark.operators.spatial_join import _resolve
+
+    edges = K.edge_table(zones.zone_ids, zones.rings_list())
+    got = _resolve(pa.array(px), pa.array(py), owner, zid, full, edges, rule)
+    return np.asarray(got.fill_null(-1).to_numpy(zero_copy_only=False), dtype=np.int64)
+
+
+@pytest.mark.parametrize("chunk", [None, 3])
+@pytest.mark.parametrize("rule", ["raster", "within"])
+@pytest.mark.parametrize("layer", sorted(_slab_layers()))
+def test_slab_resolver_matches_per_zone_kernels(monkeypatch, layer, rule, chunk):
+    if chunk is not None:  # chunk boundaries fall inside and between edges
+        monkeypatch.setattr(K, "PAIR_CHUNK", chunk)
+    zones = _slab_layers()[layer]
+    px, py = _boundary_points(zones, seed=len(layer))
+    n = len(px)
+    ids = np.sort(zones.zone_ids)
+    every = (np.repeat(np.arange(n), len(ids)), np.tile(ids, n), np.zeros(n * len(ids), bool))
+    batches = {
+        "every zone": every,
+        "random subsets": _random_candidates(zones, n, np.random.RandomState(7)),
+        "all full": every[:2] + (np.ones(n * len(ids), bool),),
+        "no candidates": (np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0, bool)),
+    }
+    for name, (owner, zid, full) in batches.items():
+        want = _resolve_reference(px, py, owner, zid, full, zones, rule)
+        got = _resolved(px, py, owner, zid, full, zones, rule)
+        np.testing.assert_array_equal(got, want, err_msg=name)
+    assert len(_resolved(px[:0], py[:0], *batches["no candidates"], zones, rule)) == 0
+
+
+def test_slab_claims_match_golden_matrices():
+    """The slab kernel alone reproduces the reference's raster goldens."""
+    cells = FX.raster_long_form()
+    px = np.array([c[2] for c in cells])
+    py = np.array([c[3] for c in cells])
+    for zones, golden in (
+        (FX.SEG_2X2, FX.GOLDEN_BELONGS_2X2),
+        (FX.SEG_3X3, FX.GOLDEN_BELONGS_3X3),
+        (FX.SEG_OVERLAP, FX.GOLDEN_BELONGS_OVERLAP),
+        (FX.SEG_HOLED, FX.GOLDEN_BELONGS_HOLED),
+    ):
+        ids, _, _ = FX.zones_arrays(zones)
+        tab = K.edge_table(ids, _rings_of(zones))
+        owner = np.repeat(np.arange(len(px)), len(ids))
+        zid = np.tile(np.sort(ids), len(px))
+        claims = K.slab_claims(tab, px, py, owner, zid)
+        out = np.full(len(px), -1, dtype=np.int64)
+        np.maximum.at(out, owner[claims], zid[claims])
+        np.testing.assert_array_equal(out.reshape(4, 4), _golden_to_array(golden))
+
+
+def test_slab_claims_refuse_bad_candidates():
+    zones = _odd_rings_layer()
+    tab = K.edge_table(zones.zone_ids, zones.rings_list())
+    px, py = np.array([0.25, 0.75]), np.array([10.25, 10.25])
+    with pytest.raises(ValueError):  # a row's candidates out of one run
+        K.slab_claims(tab, px, py, np.array([1, 0]), np.array([BIG, BIG]))
+    with pytest.raises(KeyError):  # a zone the table does not hold
+        K.slab_claims(tab, px, py, np.array([0, 1]), np.array([BIG, BIG + 3]))

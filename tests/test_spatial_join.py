@@ -14,7 +14,7 @@ from gregor_spark.operators.spatial_join import spatial_hash_join, with_cell_id
 from gregor_spark.sources.documents import generate_documents, verify_span_sequence
 from gregor_spark.operators.tiles import assign_tiles, extract_geo_points, tile_histogram
 
-from tests.helpers import no_auto_broadcast
+from tests.helpers import no_auto_broadcast, spark_conf
 
 BOUNDS = (-0.25, 9.75, 1.75, 11.75)
 RES = 6
@@ -60,6 +60,25 @@ def test_paths_agree(spark, pts):
     # and the join agrees with the cover-free assign_cells_df path
     direct = assign_cells_df(pts, zones, keep_unassigned=False)
     assert _as_map(direct) == broadcast
+
+
+def test_broadcast_rows_do_not_depend_on_arrow_batch_size(spark, pts):
+    """The resolver refines each Arrow batch in one pass: 7-row batches
+    and the default 10,000-row ones give the same rows."""
+    zones = _big_ids(ZoneSet.from_fixture(FX.SEG_OVERLAP))
+
+    def rows():
+        df = spatial_hash_join(
+            pts, zones, RES, BOUNDS, broadcast_cover=True, keep_unassigned=True
+        )
+        return _as_map(df)
+
+    default = rows()
+    with spark_conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", 7):
+        small = rows()
+    assert small == default
+    assert len(default) == pts.count()
+    assert {BIG, BIG + 1} <= set(default.values())
 
 
 def test_left_join_keeps_unassigned(spark, pts):
@@ -135,20 +154,34 @@ def test_skew_salting_spreads_hot_cell(spark):
         assert key(a) == key(b)
 
 
-def test_jvm_cell_id_matches_numpy(spark, pts):
+@pytest.mark.parametrize("res", [0, 1, 8, 9, 16, 17, 26])
+def test_jvm_cell_id_matches_numpy(spark, pts, res):
     """The codegen Morton expression must be bit-identical to the numpy
-    kernel (same IEEE op order)."""
+    kernel (same IEEE op order) at every resolution, including points
+    outside the bounds and on their edges (tiles clamp to the grid)."""
     import numpy as np
 
     from gregor_spark.geo import cells as C
 
+    outside = spark.createDataFrame(
+        [
+            (-1, -1e9, -1e9),
+            (-2, 1e9, 1e9),
+            (-3, -0.25, 11.75),
+            (-4, 1.75, 9.75),
+            (-5, 0.75, 1e9),
+            (-6, -3.0, 10.5),
+        ],
+        "point_id long, x double, y double",
+    )
+    facts = pts.unionByName(outside)
     got = {
         r["point_id"]: r["cell_id"]
-        for r in with_cell_id(pts, 9, BOUNDS).select("point_id", "cell_id").collect()
+        for r in with_cell_id(facts, res, BOUNDS).select("point_id", "cell_id").collect()
     }
-    rows = pts.collect()
+    rows = facts.collect()
     want = C.cell(
-        np.array([r["x"] for r in rows]), np.array([r["y"] for r in rows]), 9, BOUNDS
+        np.array([r["x"] for r in rows]), np.array([r["y"] for r in rows]), res, BOUNDS
     )
     assert [got[r["point_id"]] for r in rows] == want.tolist()
 
