@@ -19,8 +19,18 @@ import numpy as np
 from ..geo import cells as C
 from ..geo import kernels as K
 
-#: content-keyed memo for ZoneSet.cover (see its docstring)
+#: content-keyed memo for ZoneSet.cover and the planning metadata derived
+#: from a layer's geometry (see ZoneSet.memo)
 _COVER_CACHE: dict = {}
+
+
+def _freeze(value) -> None:
+    """Make every numpy array in ``value`` (nested tuples) read-only."""
+    if isinstance(value, np.ndarray):
+        value.flags.writeable = False
+    elif isinstance(value, tuple):
+        for v in value:
+            _freeze(v)
 
 
 @dataclass
@@ -162,21 +172,38 @@ class ZoneSet:
         ZoneSet per call — profiled 2.9 s of driver polyfill each time).
         Pure planning metadata, not data results; bounded by the small
         per-process cache."""
-        key = (self._geom_digest(), int(res), tuple(float(b) for b in bounds))
+
+        def build():
+            out = []
+            for k, z in enumerate(self.zone_ids):
+                cells, full = C.polyfill_rings(
+                    self.zone_rings(k), res, bounds, classify=True
+                )
+                for cid, f in zip(cells, full):
+                    out.append((int(z), int(cid), bool(f)))
+            return out
+
+        return self.memo((int(res), tuple(float(b) for b in bounds)), build)
+
+    def memo(self, params: tuple, build):
+        """``build()`` memoized on the zone geometry content plus
+        ``params``: the cover and the driver-side numpy metadata planners
+        derive from it per pipeline invocation.  Only plain data belongs
+        here — never a Column or UDF, which die with their SparkContext.
+        Every caller shares the result, so its arrays are made read-only."""
+        key = (self._geom_digest(), *params)
         hit = _COVER_CACHE.get(key)
-        if hit is not None:
-            return hit
-        out = []
-        for k, z in enumerate(self.zone_ids):
-            cells, full = C.polyfill_rings(
-                self.zone_rings(k), res, bounds, classify=True
-            )
-            for cid, f in zip(cells, full):
-                out.append((int(z), int(cid), bool(f)))
-        if len(_COVER_CACHE) > 32:
-            _COVER_CACHE.clear()
-        _COVER_CACHE[key] = out
-        return out
+        if hit is None:
+            hit = build()
+            _freeze(hit)
+            if len(_COVER_CACHE) > 32:
+                _COVER_CACHE.clear()
+            _COVER_CACHE[key] = hit
+        return hit
+
+    def edge_table(self) -> K.EdgeTable:
+        """The layer's ``kernels.EdgeTable`` (memoized, see ``memo``)."""
+        return self.memo(("edges",), lambda: K.edge_table(self.zone_ids, self.rings_list()))
 
     def _geom_digest(self) -> str:
         """Content hash of zone ids + ring coordinates (cache key)."""

@@ -33,7 +33,7 @@ from pyspark.sql import types as T
 
 from ..geo import kernels as K
 from ..model.zones import ZoneSet
-from .spatial_join import zone_id_col
+from .spatial_join import _group_cover, zone_id_col
 
 
 def _with_long_col(schema: T.StructType, name: str) -> T.StructType:
@@ -57,7 +57,7 @@ def assign_cells_df(
     if out in df.columns:  # re-assignment replaces a stale column
         df = df.drop(out)
     cover = [(int(z), 0, False) for z in zones.zone_ids]
-    zid = zone_id_col(zones, cover, F.col(x), F.col(y), F.lit(0).cast("long"))
+    zid = zone_id_col(zones, _group_cover(cover), F.col(x), F.col(y), F.lit(0).cast("long"))
     result = df.withColumn(out, zid)
     if not keep_unassigned:
         result = result.filter(result[out].isNotNull())

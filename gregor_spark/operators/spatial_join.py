@@ -1,15 +1,19 @@
 """Spatial hash join — the scale path for assignment (SURVEY.md §2.2, §4).
 
 Fact rows (points / document geo-spans) are keyed by Morton cell at a
-chosen resolution, and the zone cover is grouped by cell once on the
-driver (``_group_cover``: each cell's candidate zones in ascending id
-order, with interior/boundary flags).  One resolver (``_resolve``) turns
-candidates into a zone id per fact: interior candidates claim outright,
-and an Arrow batch's boundary candidates, across all their zones, go
-through one exact edge-slab pass (geo/kernels.slab_claims) over the
-layer's ``EdgeTable``, built once per call and carried in the UDF
-closure.  Multi-claims resolve deterministically last-id-wins — never
-partition order (SURVEY.md §7 hard-part (d)).  One size check
+chosen resolution (``with_cell_id``: the clamped tile indices are
+projected, then the bit-interleave ladder reads them by reference), and
+the zone cover is grouped by cell on the driver (``_group_cover``: each
+cell's candidate zones in ascending id order, with interior/boundary
+flags).  One resolver (``_resolve``) turns candidates into a zone id per
+fact: interior candidates claim outright, and an Arrow batch's boundary
+candidates, across all their zones, go through one exact edge-slab pass
+(geo/kernels.slab_claims) over the layer's ``EdgeTable``, carried in the
+UDF closure.  The grouped cover, its size estimate and the edge table
+are memoized on the zone geometry (``ZoneSet.memo``), so repeated plans
+over one layer rebuild none of them.  Multi-claims resolve
+deterministically last-id-wins — never partition order (SURVEY.md §7
+hard-part (d)).  One size check
 (``plans/strategy.broadcasts`` on the cover's estimate,
 ``_cover_bytes``) picks where candidates come from:
 
@@ -41,6 +45,71 @@ from ..geo import kernels as K
 from ..model.zones import ZoneSet
 
 
+class _Sql(str):
+    """SQL text that composes like a Column under the operations the cell
+    encode uses (``-``, ``/``, ``*``, ``bitwiseOR``, ``bitwiseAND``,
+    ``cast``, and ``_floor``/``_clamp``/``_shl`` below).  The encode is
+    written once over either form: ``cell_id_col`` builds Columns,
+    ``with_cell_id`` builds SQL text that reaches the JVM in one py4j
+    round trip.  A Column function costs three (two reflection lookups
+    and the call): building ``with_cell_id`` from Columns made about 150
+    round trips."""
+
+    def _op(self, op: str, other) -> "_Sql":
+        return _Sql(f"({self} {op} {_sql_lit(other)})")
+
+    def __sub__(self, other):
+        return self._op("-", other)
+
+    def __truediv__(self, other):
+        return self._op("/", other)
+
+    def __mul__(self, other):
+        return self._op("*", other)
+
+    def bitwiseOR(self, other):
+        return self._op("|", other)
+
+    def bitwiseAND(self, other):
+        return self._op("&", other)
+
+    def cast(self, to: str) -> "_Sql":
+        return _Sql(f"CAST({self} AS {to})")
+
+
+def _sql_lit(v) -> str:
+    """``v`` as SQL: text as is, a float as an exact double literal."""
+    if isinstance(v, str):
+        return v
+    return f"{float(v)!r}D" if isinstance(v, float) else str(int(v))
+
+
+def _sql_name(name: str) -> _Sql:
+    """A top-level column ``name`` as quoted SQL."""
+    return _Sql("`" + name.replace("`", "``") + "`")
+
+
+def _sql_ref(name: str) -> _Sql:
+    """``name`` read as ``F.col`` reads it: dots step into nested fields
+    unless the name carries its own backtick quoting."""
+    return _Sql(name if "`" in name else ".".join(map(_sql_name, name.split("."))))
+
+
+def _floor(v):
+    return _Sql(f"FLOOR({v})") if isinstance(v, _Sql) else F.floor(v)
+
+
+def _clamp(v, hi: int):
+    """``v`` clamped to ``[0, hi]``."""
+    if isinstance(v, _Sql):
+        return _Sql(f"greatest(0, least({hi}, {v}))")
+    return F.greatest(F.lit(0), F.least(F.lit(hi), v))
+
+
+def _shl(v, bits: int):
+    return _Sql(f"shiftleft({v}, {bits})") if isinstance(v, _Sql) else F.shiftleft(v, bits)
+
+
 _PART1BY1_MASKS = (
     (16, 0x0000FFFF0000FFFF),
     (8, 0x00FF00FF00FF00FF),
@@ -52,15 +121,16 @@ _PART1BY1_MASKS = (
 
 def _part1by1_col(v, bits: int = 32):
     """Interleave zeros between the low ``bits`` bits — the same
-    magic-mask ladder as geo/cells._part1by1, as pure column bit-ops.  A
-    rung whose shift is ``bits`` or more leaves a value below
-    ``2**bits`` as it is, so only the lower rungs are emitted; a caller
-    passing ``bits < 32`` guarantees ``0 <= v < 2**bits``."""
+    magic-mask ladder as geo/cells._part1by1, as pure column bit-ops
+    (``v`` a Column or ``_Sql``).  A rung whose shift is ``bits`` or more
+    leaves a value below ``2**bits`` as it is, so only the lower rungs
+    are emitted; a caller passing ``bits < 32`` guarantees
+    ``0 <= v < 2**bits``."""
     if bits >= 32:
-        v = v.bitwiseAND(F.lit(0xFFFFFFFF))
+        v = v.bitwiseAND(0xFFFFFFFF)
     for shift, mask in _PART1BY1_MASKS:
         if shift < bits:
-            v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
+            v = (v.bitwiseOR(_shl(v, shift))).bitwiseAND(mask)
     return v
 
 
@@ -136,29 +206,41 @@ def neighbor_cells_col(cell, res: int):
     return F.array_compact(F.array(*cands))
 
 
+def _tile_col(coord, lo: float, hi: float, n: int):
+    """Clamped tile index in ``[0, n)`` of ``coord`` (a Column or
+    ``_Sql``) along one axis — the same IEEE op order as
+    geo/cells.xy_to_tile."""
+    return _clamp(_floor((coord - lo) / (hi - lo) * float(n)).cast("long"), n - 1)
+
+
+def _morton_col(tx, ty, res: int):
+    """Cell id from the clamped tile indices ``tx``, ``ty`` (Columns or
+    ``_Sql``) at ``res``.  Each ladder rung reads its input twice, so
+    callers pass cheap operands (column references) where they can: an
+    inline tile expression is copied ``2 ** rungs`` times into the plan."""
+    # tiles are clamped to [0, 2**res), so only the rungs below res apply
+    morton = _part1by1_col(tx, res).bitwiseOR(_shl(_part1by1_col(ty, res), 1))
+    return morton.bitwiseOR(res << 56)
+
+
+def _check_res(res: int) -> None:
+    if not 0 <= res <= C.MAX_RES:
+        raise ValueError(f"res must be in [0, {C.MAX_RES}]")
+
+
 def cell_id_col(
     x, y, res: int, bounds: tuple[float, float, float, float] = C.WORLD
 ):
-    """Morton cell id as a pure column expression (whole-stage codegen;
-    zero Python).  Bit-identical to the numpy kernel geo/cells.cell —
-    same IEEE op order, asserted in tests.  THE single definition: both
-    ``with_cell_id`` and the public ``gregor_spark.functions.cell`` wrap
-    this builder, so the two can never drift."""
-    if not 0 <= res <= C.MAX_RES:
-        raise ValueError(f"res must be in [0, {C.MAX_RES}]")
+    """Morton cell id as one column expression (whole-stage codegen; zero
+    Python), for composing in a caller's own query
+    (``gregor_spark.functions.cell``).  Bit-identical to the numpy kernel
+    geo/cells.cell — same IEEE op order, asserted in tests.  It shares
+    ``_tile_col`` and ``_morton_col`` with ``with_cell_id``, so the two
+    can never drift."""
+    _check_res(res)
     minx, miny, maxx, maxy = bounds
     n = 1 << res
-
-    def tile(coord, lo, hi):
-        f = (coord - F.lit(lo)) / F.lit(hi - lo)
-        t = F.floor(f * F.lit(float(n))).cast("long")
-        return F.greatest(F.lit(0), F.least(F.lit(n - 1), t))
-
-    # tile() is clamped to [0, n), so only the rungs below res apply
-    morton = _part1by1_col(tile(x, minx, maxx), res).bitwiseOR(
-        F.shiftleft(_part1by1_col(tile(y, miny, maxy), res), 1)
-    )
-    return F.lit(res << 56).bitwiseOR(morton)
+    return _morton_col(_tile_col(x, minx, maxx, n), _tile_col(y, miny, maxy, n), res)
 
 
 def with_cell_id(
@@ -169,8 +251,24 @@ def with_cell_id(
     y: str = "y",
     out: str = "cell_id",
 ) -> DataFrame:
-    """Add the Morton cell id column (see cell_id_col)."""
-    return df.withColumn(out, cell_id_col(F.col(x), F.col(y), res, bounds))
+    """Add the Morton cell id column (the encode of ``cell_id_col``,
+    rendered as SQL text).
+
+    The tile indices are projected first and the Morton ladder reads
+    them by reference, so the plan holds each axis's tile expression
+    once (``cell_id_col`` inlines it into every rung)."""
+    _check_res(res)
+    minx, miny, maxx, maxy = bounds
+    n = 1 << res
+    tiles = df.selectExpr(
+        "*",
+        f"{_tile_col(_sql_ref(x), minx, maxx, n)} AS _tile_x",
+        f"{_tile_col(_sql_ref(y), miny, maxy, n)} AS _tile_y",
+    )
+    enc = f"{_morton_col(_Sql('_tile_x'), _Sql('_tile_y'), res)} AS {_sql_name(out)}"
+    # withColumn's contract: an existing ``out`` is replaced in place
+    cols = [enc if c == out else _sql_name(c) for c in df.columns]
+    return tiles.selectExpr(*cols, *([] if out in df.columns else [enc]))
 
 
 def _group_cover(cover_pairs: list[tuple[int, int, bool]]):
@@ -207,14 +305,14 @@ def _resolve(xs: pa.Array, ys: pa.Array, owner, zid, full, edges: K.EdgeTable, r
     return pa.array(out, mask=out < 0, type=pa.int64())
 
 
-def zone_id_col(zones: ZoneSet, cover_pairs, x, y, cell, rule: str = "raster"):
+def zone_id_col(zones: ZoneSet, by_cell, x, y, cell, rule: str = "raster"):
     """Zone id (NULL = unassigned) of each row from its ``cell`` column and
-    the ``(zone_id, cell_id, full)`` cover, which rides grouped by cell in
-    the UDF closure with the zones' edge table — map only, zero shuffle.
-    Arrow moves just (x, y, cell); per batch one ``searchsorted`` gathers
-    every row's candidates and one slab pass refines them."""
-    cells, offsets, cand_z, cand_f = _group_cover(cover_pairs)
-    edges = K.edge_table(zones.zone_ids, zones.rings_list())
+    the cover grouped by cell (``_group_cover``), which rides in the UDF
+    closure with the zones' edge table — map only, zero shuffle.  Arrow
+    moves just (x, y, cell); per batch one ``searchsorted`` gathers every
+    row's candidates and one slab pass refines them."""
+    cells, offsets, cand_z, cand_f = by_cell
+    edges = zones.edge_table()
 
     @F.arrow_udf(T.LongType())
     def assign(xs: pa.Array, ys: pa.Array, cs: pa.Array) -> pa.Array:
@@ -235,7 +333,7 @@ def zone_id_col(zones: ZoneSet, cover_pairs, x, y, cell, rule: str = "raster"):
 def _candidates_col(zones: ZoneSet, x, y, rule: str):
     """Zone id of each joined row from its per-cell candidate arrays
     (``_z`` zone ids, ``_f`` interior flags; NULL when no cell matched)."""
-    edges = K.edge_table(zones.zone_ids, zones.rings_list())
+    edges = zones.edge_table()
 
     @F.arrow_udf(T.LongType())
     def assign(xs: pa.Array, ys: pa.Array, zs: pa.Array, fs: pa.Array) -> pa.Array:
@@ -313,12 +411,17 @@ def spatial_hash_join(
     from ..plans.strategy import broadcasts
 
     cover_pairs = zones.cover(res, bounds)
+    # per layer and resolution, not per call: numpy metadata only
+    by_cell, est_bytes = zones.memo(
+        (int(res), tuple(float(b) for b in bounds), "by_cell"),
+        lambda: (_group_cover(cover_pairs), _cover_bytes(cover_pairs)),
+    )
     keyed = with_cell_id(facts, res, bounds, x=x, y=y)
     fact_cols = keyed.columns
     how = "left" if keep_unassigned else "inner"
 
-    if broadcast_cover or broadcasts(facts.sparkSession, _cover_bytes(cover_pairs)):
-        zid = zone_id_col(zones, cover_pairs, F.col(x), F.col(y), F.col("cell_id"), rule)
+    if broadcast_cover or broadcasts(facts.sparkSession, est_bytes):
+        zid = zone_id_col(zones, by_cell, F.col(x), F.col(y), F.col("cell_id"), rule)
         assigned = keyed.withColumn("zone_id", zid)
         if not keep_unassigned:
             assigned = assigned.filter(F.col("zone_id").isNotNull())

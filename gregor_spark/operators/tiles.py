@@ -1,12 +1,13 @@
 """Document tiling — geo-bearing spans drive tile/zone assignment
 (the north-rule pipeline over the interleaved corpus).
 
-Span extraction stays entirely JVM-side (higher-order ``filter`` +
-``posexplode`` + ``split``/``cast`` — whole-stage codegen, zero Python);
-only the Morton encode and the exact PIP refine cross into Arrow-batched
-pandas UDFs.  Documents themselves are never mutated: tile assignment is
-a SIDE TABLE keyed by (doc_id, offset), so per-doc span-sequence equality
-holds by construction and is verified explicitly in tests.
+Span extraction stays entirely JVM-side (``inline`` + a ``kind = 'geo'``
+filter + ``split``/``cast``, all in whole-stage codegen; zero Python), and
+so does the Morton encode; only the exact PIP refine crosses into an
+Arrow-batched UDF.  Documents themselves are never mutated: tile
+assignment is a SIDE TABLE keyed by (doc_id, offset), so per-doc
+span-sequence equality holds by construction and is verified explicitly
+in tests.
 """
 
 from __future__ import annotations
@@ -22,20 +23,21 @@ from .spatial_join import spatial_hash_join, with_cell_id
 def extract_geo_points(docs: DataFrame, spans: str = "spans") -> DataFrame:
     """(doc_id, offset, lon, lat) for every geo-bearing span.
 
-    ``filter`` prunes non-geo spans before the explode (array shrink
-    happens inside codegen, so the exploded row count is only the geo
-    spans).  Span order within the doc is preserved by ``offset``.
+    ``inline`` flattens the spans to rows and a plain ``kind = 'geo'``
+    filter keeps the geo ones; both run in the scan's codegen stage (a
+    higher-order ``filter`` would run its lambda interpreted on every
+    span).  A NULL ``spans`` array, a NULL element and a NULL ``kind``
+    yield no row.  ``text`` is ``"lon,lat"``: its first two
+    comma-separated parts cast to double (NULL where missing or not a
+    number).  Span order within the doc is preserved by ``offset``.
     """
-    geo = F.filter(F.col(spans), lambda s: s["kind"] == F.lit("geo"))
-    ex = docs.select(
-        "doc_id", F.explode(geo).alias("span")
-    )
-    parts = F.split(F.col("span.text"), ",")
-    return ex.select(
+    # SQL text: one py4j call per frame instead of one per column function
+    geo = docs.selectExpr("doc_id", f"inline(`{spans}`)").where("kind = 'geo'")
+    return geo.selectExpr(
         "doc_id",
-        F.col("span.offset").alias("offset"),
-        parts.getItem(0).cast("double").alias("lon"),
-        parts.getItem(1).cast("double").alias("lat"),
+        "offset",
+        "CAST(split(text, ',')[0] AS DOUBLE) AS lon",
+        "CAST(split(text, ',')[1] AS DOUBLE) AS lat",
     )
 
 

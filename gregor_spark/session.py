@@ -71,6 +71,16 @@ def get_spark(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
             os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "8192"),
         )
+        # PySpark wraps F.col and every Column method in a call-site
+        # capture (pyspark.errors.utils._with_origin): per call a
+        # getActiveSession, a py4j conf read, an `inspect` stack walk and
+        # a JVM origin set/clear.  Building one north-rule plan made
+        # about 440 extra py4j calls (757 instead of 317).  Cost of
+        # turning it off: a DataFrame error no longer carries the Python
+        # call-site block.  PySpark reads this once per process, at the
+        # first wrapped call made while a session is active; ``extra``
+        # can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # optional RAM-backed shuffle dir (SPARK_GRAFT_LOCAL_DIR=/dev/shm/...):
     # on one box every task thread shares a single disk for shuffle files;

@@ -165,6 +165,35 @@ def test_closure_builds_no_cover_frame(spark, parquet_cells, monkeypatch):
         assert _is_map_only(_formatted(out))
 
 
+def test_join_plans_reuse_the_grouped_cover_and_edge_table(spark, parquet_cells, monkeypatch):
+    """The grouped cover and the edge table are memoized on zone geometry:
+    two plans over equal-geometry layers build each once, and moving one
+    vertex builds them again."""
+    from gregor_spark.geo import kernels
+    from gregor_spark.model import zones as zones_mod
+    from gregor_spark.operators import spatial_join
+
+    built = {"group": 0, "edges": 0}
+
+    def spy(name, fn):
+        def counted(*a, **k):
+            built[name] += 1
+            return fn(*a, **k)
+        return counted
+
+    monkeypatch.setattr(zones_mod, "_COVER_CACHE", {})
+    monkeypatch.setattr(spatial_join, "_group_cover", spy("group", spatial_join._group_cover))
+    monkeypatch.setattr(kernels, "edge_table", spy("edges", kernels.edge_table))
+    for _ in range(2):  # a fresh, equal ZoneSet per plan
+        spatial_hash_join(parquet_cells, ZoneSet.from_fixture(FX.SEG_2X2), 6, BOUNDS)
+    assert built == {"group": 1, "edges": 1}
+    moved = ZoneSet.from_fixture(FX.SEG_2X2)
+    moved.xs[0] = moved.xs[0].copy()
+    moved.xs[0][0] += 0.01
+    spatial_hash_join(parquet_cells, moved, 6, BOUNDS)
+    assert built == {"group": 2, "edges": 2}
+
+
 def test_salted_join_salts_when_the_cover_cannot_broadcast(spark, parquet_cells):
     """With broadcasts by size off (threshold -1), or a threshold one byte
     under the cover's estimate, the salted request plans the histogram
@@ -195,6 +224,41 @@ def test_salted_join_salts_when_the_cover_cannot_broadcast(spark, parquet_cells)
 def test_morton_encode_is_codegen(spark, parquet_cells):
     plan = _formatted(with_cell_id(parquet_cells, 8, BOUNDS))
     assert "codegen id" in plan, plan  # encode runs inside a codegen stage
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_cell_encode_holds_each_tile_once(spark, parquet_cells):
+    """The Morton ladder reads each rung's input twice; with the tile
+    indices projected first the plan carries each axis's tile
+    expression once, not once per ladder copy."""
+    plan = _optimized(with_cell_id(parquet_cells, 8, BOUNDS))
+    assert plan.upper().count("FLOOR(") == 2, plan
+
+
+@pytest.fixture(scope="module")
+def parquet_docs(spark, tmp_path_factory):
+    from gregor_spark.sources.documents import SPAN_SCHEMA
+
+    p = str(tmp_path_factory.mktemp("plans") / "docs.parquet")
+    rows = [("d0", [("geo", "0.5,10.5", None, 0), ("text", "hi", None, 1)])]
+    spark.createDataFrame(rows, f"doc_id string, spans {SPAN_SCHEMA}").write.parquet(p)
+    return spark.read.parquet(p)
+
+
+def test_geo_extract_is_codegen_without_lambda(spark, parquet_docs):
+    """The span extract flattens and filters in the scan's codegen stage:
+    no higher-order function (its lambda runs interpreted per span)."""
+    from gregor_spark.operators.tiles import extract_geo_points
+
+    pts = extract_geo_points(parquet_docs)
+    assert "lambdafunction" not in _optimized(pts).lower()
+    plan = _formatted(pts)
+    for node in ("Generate", "Filter"):
+        assert re.search(rf"\(\d+\) {node} \[codegen id : \d+\]", plan), plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, plan
 
 

@@ -28,3 +28,9 @@ def test_running_session_heap_fits_physical_ram(spark):
         return  # an explicit override is the caller's choice
     heap = spark.sparkContext.getConf().get("spark.driver.memory")
     assert _mb(heap) <= _mem_total_mb()
+
+
+def test_session_skips_dataframe_call_site_capture(spark):
+    """Column calls skip PySpark's per-call call-site capture (a py4j conf
+    read and a stack walk each): the session turns it off."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"

@@ -186,6 +186,18 @@ def test_jvm_cell_id_matches_numpy(spark, pts, res):
     assert [got[r["point_id"]] for r in rows] == want.tolist()
 
 
+@pytest.mark.parametrize("res", [0, 1, 8, 17, 26])
+def test_sql_and_column_encodes_agree(spark, pts, res):
+    """``with_cell_id`` renders the encode as SQL text and
+    ``functions.cell`` as Columns, from the same builders: equal ids."""
+    from gregor_spark import functions as GF
+
+    both = with_cell_id(pts, res, BOUNDS).withColumn(
+        "c", GF.cell(F.col("x"), F.col("y"), res, BOUNDS)
+    )
+    assert both.filter(~F.col("cell_id").eqNullSafe(F.col("c"))).count() == 0
+
+
 def test_assign_tiles_auto_resolution(spark):
     """res=None → planner-chosen resolution; assignment unchanged."""
     zones = ZoneSet.from_fixture(FX.SEG_2X2)
@@ -271,3 +283,52 @@ def test_paths_agree_on_adversarial_facts(spark, path, layer):
             for r in _run_path(path, facts, zones).select("id", "zone_id").collect()
         )
     assert got == expected
+
+
+def _ref_geo_points(docs):
+    """Pure-Python ``extract_geo_points``: every span whose ``kind`` is
+    ``"geo"``, ``text`` split on ``","`` (trailing empty parts kept), its
+    first two parts as doubles, NULL where a part is missing or not a
+    number."""
+
+    def num(parts, i):
+        if parts is None or i >= len(parts):
+            return None
+        try:
+            return float(parts[i])
+        except ValueError:
+            return None
+
+    out = []
+    for doc_id, spans in docs:
+        for s in spans or ():
+            if s is None or s[0] != "geo":
+                continue
+            parts = None if s[1] is None else s[1].split(",")
+            out.append((doc_id, s[3], num(parts, 0), num(parts, 1)))
+    return out
+
+
+def test_extract_geo_points_matches_reference_on_adversarial_spans(spark, tmp_path):
+    from gregor_spark.sources.documents import SPAN_SCHEMA
+
+    docs = [
+        ("null_array", None),
+        ("empty_array", []),
+        ("null_elem", [None, ("geo", "0.5,10.5", None, 1), None]),
+        ("null_kind", [(None, "0.5,10.5", None, 0), ("geo", "1.0,11.0", "m", 1)]),
+        ("no_comma", [("geo", "0.75", None, 0)]),
+        ("three_parts", [("geo", "0.25,10.25,99", None, 0)]),
+        ("empty_text", [("geo", "", None, 0), ("geo", ",", None, 1)]),
+        ("null_text", [("geo", None, None, 0)]),
+        ("non_numeric", [("geo", "abc,def", None, 0), ("geo", "1.5,xyz", None, 1),
+                         ("geo", "-0.1,", None, 2)]),
+        ("lookalike", [("text", "0.5,10.5", None, 0), ("image", "1,2", "img", 1),
+                       ("geo", " 0.5 , 10.5 ", None, 2)]),
+    ]
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(docs, f"doc_id string, spans {SPAN_SCHEMA}").write.parquet(path)
+    got = extract_geo_points(spark.read.parquet(path))
+    assert got.columns == ["doc_id", "offset", "lon", "lat"]
+    rows = [tuple(r) for r in got.collect()]
+    assert sorted(rows, key=repr) == sorted(_ref_geo_points(docs), key=repr)
